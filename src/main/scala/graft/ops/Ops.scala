@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.BM25
+
 /** Driver-verified operators (SparkEntry.queries): the SQL-expressible
   * analogs of SURVEY.md §2 over the driver's parquet tables, plus the
   * training-data-pipeline ops (dedup, similarity, text analysis) that a
@@ -137,8 +139,7 @@ object Ops {
       case (tm, i) =>
         val df = row.getLong(2 + i)
         if (df == 0L) None
-        else Some(tm -> (math.log(1.0 + ((nDocs - df).toDouble + 0.5) /
-          (df.toDouble + 0.5)) * boosts.getOrElse(tm, 1.0)))
+        else Some(tm -> BM25.idf(nDocs, df) * boosts.getOrElse(tm, 1.0))
     }.toMap
     val matched = fqTerms.foldLeft(
         perDoc
@@ -175,8 +176,8 @@ object Ops {
       transform(array_distinct(qd), tm => {
         val tf = size(filter(qd, y => y === tm)).cast("double")
         element_at(wLit, tm) * tf /
-          (tf + lit(1.2) * (lit(1.0) - 0.75 +
-            lit(0.75) * col("doclen").cast("double") / lit(avgdl)))
+          (tf + lit(BM25.K1) * (lit(1.0) - BM25.B +
+            lit(BM25.B) * col("doclen").cast("double") / lit(avgdl)))
       }),
       lit(0.0), (acc, x) => acc + x)
   }
@@ -242,8 +243,7 @@ object Ops {
     // Average(LongType) = exact-integer double sum / double count — the
     // same division the old in-plan avg(doclen) evaluated
     val avgdlText = row.getLong(2).toDouble / row.getLong(1).toDouble
-    def idf(df: Long): Double =
-      math.log(1.0 + ((nDocs - df).toDouble + 0.5) / (df.toDouble + 0.5))
+    def idf(df: Long): Double = BM25.idf(nDocs, df)
     val wText: Map[String, Double] = qTerms.zipWithIndex.flatMap {
       case (tm, i) =>
         val df = row.getLong(3 + 2 * i)
@@ -256,7 +256,7 @@ object Ops {
         val df = row.getLong(4 + 2 * i)
         if (df == 0L) None
         else Some(tm -> idf(df) * 3.0 * 1.0 /
-          (1.0 + 1.2 * (1.0 - 0.75 + 0.75 * 1.0 / 1.0)))
+          (1.0 + BM25.K1 * (1.0 - BM25.B + BM25.B * 1.0 / 1.0)))
     }.toMap
     val srcScore = srcContrib.foldLeft(lit(0.0)) { case (e, (tm, c)) =>
       when(col("srcTerm") === tm, lit(c)).otherwise(e)
@@ -1452,8 +1452,7 @@ object Ops {
       .flatMap { case (tm, stf) => dfMap.get(tm).map(df => (tm, stf, df)) }
       .filter(_._3 >= minDf)
       .map { case (tm, stf, df) =>
-        (tm, df, round4(math.log(1.0 + ((nDocs - df) + 0.5) /
-          (df + 0.5)) * stf))
+        (tm, df, round4(BM25.idf(nDocs, df) * stf))
       }
       .sortBy { case (tm, _, mlt) => (-mlt, tm) }
       .take(maxTerms)
@@ -1461,7 +1460,7 @@ object Ops {
     // final scoring: the same in-row fold as bm25Scored, weights = plain
     // idf of the selected terms (unboosted: ×1.0 is IEEE-exact)
     val weights: Map[String, Double] = qt.map { case (tm, df) =>
-      tm -> math.log(1.0 + ((nDocs - df).toDouble + 0.5) / (df.toDouble + 0.5))
+      tm -> BM25.idf(nDocs, df)
     }.toMap
     val qtTerms = qt.map(_._1)
     perDoc

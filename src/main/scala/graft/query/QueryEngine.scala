@@ -37,6 +37,13 @@ import graft.index._
   * ([[IndexLayout]]): segments of the SAME term may come from multiple
   * append batches, so per-term document frequency is summed over segment
   * rows at query time (exact — segments are docId-disjoint).
+  *
+  * @param driverWandMaxSegments segment-row threshold under which WAND runs
+  *   on the driver: each row is one compressed segment (≤ segmentMaxDocs
+  *   postings), so the collected working set is small and two Spark stages
+  *   of scheduling latency are saved. Above it, the distributed windowed
+  *   path takes over — the same split a coordinator/shard search engine
+  *   makes. 0 forces the distributed shape.
   */
 final class QueryEngine(spark: SparkSession, indexDir: String,
     numBuckets: Int = 32, driverWandMaxSegments: Int = 256,
@@ -47,7 +54,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
 
   /** Immutable snapshot of the resolved index state (generation set, corpus
     * stats, relation handles). Held in ONE volatile field and swapped whole:
-    * auto-compaction under appends made [[refreshIfStale]] run concurrently
+    * auto-compaction under appends made [[snapshot]] refreshes concurrent
     * with queries, and with four separate vars a racing query could observe
     * a torn mix (new segdirs + old postings, or new stats against old
     * segments → wrong idf/norms). A query now sees the old or the new
@@ -75,31 +82,19 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       * Postings files are immutable between compactions, and this cache
       * dies with its view at the pointer flip that follows one.
       */
-    val segCache =
-      new java.util.LinkedHashMap[String, Array[PostingSegment]](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Array[PostingSegment]]): Boolean =
-          size() > 256
-      }
+    val segCache = lru[Array[PostingSegment]](256)
 
-    /** Bounded LRU of driver-side stored-field filter results: canonical
-      * predicate key → sorted matching docIds (each ≤ MaxDriverFilterDocs).
+    /** Driver-side filter results ([[driverFilters]]): stored-field
+      * predicate or term-fq key → sorted matching docIds (each ≤
+      * MaxDriverFilterDocs; an over-cap result is never stored).
       */
-    val filterCache =
-      new java.util.LinkedHashMap[String, Array[Long]](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Array[Long]]): Boolean = size() > 64
-      }
+    val filterCache = lru[Option[Array[Long]]](64)
 
-    /** Bounded LRU of prefix/fuzzy literal → expansion (dictionary terms).
+    /** Dictionary expansions (prefix/fuzzy/wildcard/range/regex) → terms.
       * Fuzzy entries key as `key + "~" + maxEdits` — '~' never appears in a
-      * term key, so the two families cannot collide.
+      * term key, so the families cannot collide.
       */
-    val prefixCache =
-      new java.util.LinkedHashMap[String, Seq[String]](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, Seq[String]]): Boolean = size() > 64
-      }
+    val prefixCache = lru[Seq[String]](64)
 
     /** Per-segment docsmap (file → url min/max) for realtimeGet planning.
       * Cached only for PUBLISHED segments of this view — an in-flight
@@ -108,6 +103,27 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val docsMapCache = scala.collection.mutable.Map
       .empty[String, Option[Array[(String, String, String)]]]
   }
+
+  /** Access-ordered map that evicts its least recently used entry past
+    * `cap`; callers synchronize on it ([[cached]]).
+    */
+  private def lru[V](cap: Int): java.util.Map[String, V] =
+    new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, V]) =
+        size() > cap
+    }
+
+  /** Read-through on a view cache: a hit returns the stored value; a miss
+    * computes it and stores it only when `keep` holds (an over-threshold
+    * result is returned but never cached).
+    */
+  private def cached[V](cache: java.util.Map[String, V], key: String,
+      keep: V => Boolean = (_: V) => true)(compute: => V): V =
+    cache.synchronized(Option(cache.get(key))).getOrElse {
+      val value = compute
+      if (keep(value)) cache.synchronized(cache.put(key, value))
+      value
+    }
 
   @volatile private var view: IndexView = buildView()
 
@@ -132,11 +148,6 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       readDocs(sd), readPostings(sd))
   }
 
-  private def segdirs: Seq[String] = view.segdirs
-  private def statsV: CorpusStats = view.stats
-  private def docsV: DataFrame = view.docs
-  private def postingsV: DataFrame = view.postings
-
   private def readDocs(sd: Seq[String]): DataFrame =
     spark.read.parquet(sd.map(s => s"$indexDir/$s/docs"): _*)
 
@@ -151,8 +162,8 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     sd.map(s => spark.read.parquet(s"$indexDir/$s/postings"))
       .reduce(_.unionByName(_))
 
-  def stats: CorpusStats = statsV
-  def docs: DataFrame = docsV
+  def stats: CorpusStats = view.stats
+  def docs: DataFrame = view.docs
 
   /** Delete-by-id tombstones + each live segment's upsert `supersedes/`
     * (written before the pointer flip, visible with it — see
@@ -166,21 +177,24 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       .select($"docId"))
   }
 
-  /** Pointer-staleness guard, run at the top of every query when
-    * `autoRefresh` is on (default): re-resolve the generation pointer and
-    * drop the caches if it moved. Matters because compaction is now
-    * AUTOMATIC under appends (IndexConf.autoCompactGenerations) — without
-    * this, a long-lived engine over a streaming index either crashes on
-    * GC'd segment files or, worse, silently serves upsert victims out of
-    * its segment cache after the folded supersedes disappear. Cost is two
-    * local fs metadata ops per query (~50 µs here); on an object store an
-    * operator can pass autoRefresh=false and call [[invalidateCache]] on an
-    * external signal instead (the Solr NRT openSearcher pattern).
+  /** The view a query runs against — every query path captures it ONCE at
+    * its top. Pointer-staleness guard first, when `autoRefresh` is on
+    * (default): re-resolve the generation pointer and drop the caches if it
+    * moved. Matters because compaction is AUTOMATIC under appends
+    * (IndexConf.autoCompactGenerations) — without this, a long-lived engine
+    * over a streaming index either crashes on GC'd segment files or, worse,
+    * silently serves upsert victims out of its segment cache after the
+    * folded supersedes disappear. Cost is two local fs metadata ops per
+    * query (~50 µs on a local disk); on an object store an operator can pass
+    * autoRefresh=false and call [[invalidateCache]] on an external signal
+    * instead (the Solr NRT openSearcher pattern).
     */
-  private def refreshIfStale(): Unit =
+  private def snapshot(): IndexView = {
     if (autoRefresh &&
-        !IndexLayout.current(spark, indexDir).contains(segdirs))
+        !IndexLayout.current(spark, indexDir).contains(view.segdirs))
       invalidateCache()
+    view
+  }
 
   /** Re-resolve the generation pointer and drop every cache — call after a
     * compaction or append performed while this engine instance is live.
@@ -209,14 +223,6 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       .as[PostingSegment]
   }
 
-  /** Segment-row threshold under which WAND runs on the driver: each row is
-    * one compressed segment (≤ segmentMaxDocs postings), so the collected
-    * working set is small and two Spark stages of scheduling latency are
-    * saved. Above it, the distributed windowed path takes over — the same
-    * split a coordinator/shard search engine makes.
-    */
-  private val DriverWandMaxSegments = driverWandMaxSegments
-
   private def loadDocsMap(sd: String): Option[Array[(String, String, String)]] = {
     val p = new org.apache.hadoop.fs.Path(s"$indexDir/$sd/docsmap/_SUCCESS")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -242,16 +248,16 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
       b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) <= 0
 
-  /** @param after deep-pagination anchor (Lucene searchAfter / Solr
-    *              cursorMark): return the k docs ranking strictly after
-    *              (score, docId) in (-score, docId) order. Scores are
-    *              bit-identical across paths and parallelism, so a page
-    *              boundary from any path anchors any other; paging with a
-    *              constant k touches O(k) driver memory per page where the
-    *              reference's `rows=100000` (searchindex.py:98) heaps the
-    *              whole result — the 100× shape for scan-all-matches.
-    */
-  /** @param fq Solr filter queries: each string parses with the same
+  /** Top-k by (-score, docId) on the default (WAND) path.
+    *
+    * @param after deep-pagination anchor (Lucene searchAfter / Solr
+    *   cursorMark): return the k docs ranking strictly after (score, docId)
+    *   in (-score, docId) order. Scores are bit-identical across paths and
+    *   parallelism, so a page boundary from any path anchors any other;
+    *   paging with a constant k touches O(k) driver memory per page where
+    *   the reference's `rows=100000` (searchindex.py:98) heaps the whole
+    *   result — the 100× shape for scan-all-matches.
+    * @param fq Solr filter queries: each string parses with the same
     *   grammar and its MATCH SET constrains results WITHOUT contributing to
     *   scores (fq terms never score — the Solr q-vs-fq split; an `a AND b`
     *   clause instead scores both). Pure-filter fqs (`lang:en`,
@@ -294,8 +300,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       qOp: String = "OR",
       qf: Seq[(String, Double)] = Nil,
       tie: Double = 0.0): Seq[QueryEngine.ExplainEntry] = {
-    refreshIfStale()
-    val v = view
+    val v = snapshot()
     val ast = QueryParser.parse(q, df, qOp, qf, tie)
     if (ast.matchAll)
       return Seq(QueryEngine.ExplainEntry("*:*", 0, 0, 0L, 1.0, 1.0, 1.0))
@@ -346,7 +351,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
   private def avgdlOf(s: CorpusStats): Wand.FieldAvgdl =
     Wand.FieldAvgdl(s.avgdl, s.titleAvgdl)
 
-  // ------------------------------------------------------ prefix expansion
+  // -------------------------------------------------- dictionary expansion
 
   /** Dictionary expansion of a trailing-* prefix: a term-RANGE scan over the
     * sorted term column (Parquet min/max prunes row groups in every bucket —
@@ -366,51 +371,27 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     * drops dead terms and restores exact agreement — covered by the
     * EngineSpec "over-cap prefix + deletes" fixture.
     */
-  /** Plan-audit hook (ExplainCheck): the physical plan of the prefix
-    * dictionary scan, for verifying the range predicate reaches the parquet
-    * reader as PushedFilters (no full-vocabulary decode).
-    */
-  def prefixScanPlan(prefix: String): String = {
-    var scan = postingsV.filter($"term" >= prefix && $"term" < prefix + "\uffff")
-    if (!prefix.contains(":")) scan = scan.filter(!$"term".contains(":"))
-    scan.select($"term").distinct().orderBy($"term")
-      .limit(QueryResolve.MaxPrefixExpansion)
-      .queryExecution.executedPlan.toString
-  }
-
-  private[query] def expandPrefix(prefix: String): Seq[String] =
-    expandPrefix(view, prefix)
-
-  private def expandPrefix(v: IndexView, prefix: String): Seq[String] = {
-    v.prefixCache.synchronized(Option(v.prefixCache.get(prefix))) match {
-      case Some(hit) => return hit
-      case None      =>
-    }
+  private def prefixScan(v: IndexView, prefix: String): Dataset[String] = {
     var scan = v.postings
       .filter($"term" >= prefix && $"term" < prefix + "\uffff")
     if (!prefix.contains(":")) // text-field prefix: skip field-qualified keys
       scan = scan.filter(!$"term".contains(":"))
-    val terms = scan.select($"term").distinct().orderBy($"term")
-      .limit(QueryResolve.MaxPrefixExpansion).as[String].collect().toSeq
-    v.prefixCache.synchronized(v.prefixCache.put(prefix, terms))
-    terms
+    scan.select($"term").distinct().orderBy($"term")
+      .limit(QueryResolve.MaxPrefixExpansion).as[String]
   }
 
-  /** Plan-audit hooks (ExplainCheck): physical plans of the fuzzy and
-    * wildcard dictionary scans — a field-qualified fuzzy key must show its
-    * `title:` StartsWith pushed to parquet, a wildcard with a literal
-    * prefix must show the term-range pushdown, same as prefixScanPlan.
+  /** Field-restricted dictionary scan: the postings relation constrained
+    * to ONE indexed field's keyspace — bare (text) keys exclude every
+    * ':'-qualified key, title keys by prefix. The single definition behind
+    * the fuzzy/wildcard/range/regex surfaces: a field-keying change lands
+    * here once.
     */
-  def fuzzyScanPlan(key: String, maxEdits: Int): String =
-    fuzzyScan(view, key, maxEdits)._1.queryExecution.executedPlan.toString
-  def wildcardScanPlan(key: String): String =
-    wildcardScan(view, key)._1.queryExecution.executedPlan.toString
-
-  private[query] def expandFuzzy(key: String, maxEdits: Int): Seq[String] =
-    expandFuzzy(view, key, maxEdits)
+  private def fieldTermScan(v: IndexView, fieldPfx: String): DataFrame =
+    if (fieldPfx.isEmpty) v.postings.filter(!$"term".contains(":"))
+    else v.postings.filter($"term".startsWith(fieldPfx))
 
   /** Lucene `term~N` dictionary expansion: distinct same-field terms within
-    * Damerau-Levenshtein maxEdits of the key's token, sorted, capped \u2014
+    * Damerau-Levenshtein maxEdits of the key's token, sorted, capped —
     * [[QueryResolve.dictFuzzy]] is the in-memory twin; both sides must stay
     * in lockstep or rank-identity breaks.
     *
@@ -419,19 +400,9 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     * dictionary with the distance predicate evaluated distributedly. A
     * field-qualified key pushes its `title:` range to parquet; a bare key
     * scans the full dictionary (edits can change the first character, so no
-    * range prunes) \u2014 bounded by vocabulary size, not corpus size, and the
+    * range prunes) — bounded by vocabulary size, not corpus size, and the
     * length window cuts the distinct shuffle before the matrix runs.
     */
-  /** Field-restricted dictionary scan: the postings relation constrained
-    * to ONE indexed field's keyspace — bare (text) keys exclude every
-    * ':'-qualified key, title keys by prefix. The single definition behind
-    * all five dictionary surfaces (prefix/fuzzy/wildcard/range/regex): a
-    * field-keying change lands here once.
-    */
-  private def fieldTermScan(v: IndexView, fieldPfx: String): DataFrame =
-    if (fieldPfx.isEmpty) v.postings.filter(!$"term".contains(":"))
-    else v.postings.filter($"term".startsWith(fieldPfx))
-
   private def fuzzyScan(v: IndexView, key: String, maxEdits: Int)
       : (Dataset[String], String) = {
     val colon = key.indexOf(':')
@@ -448,21 +419,6 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       .orderBy($"term").limit(QueryResolve.MaxPrefixExpansion),
       key + "~" + maxEdits)
   }
-
-  private def expandFuzzy(v: IndexView, key: String, maxEdits: Int)
-      : Seq[String] = {
-    val (scan, cacheKey) = fuzzyScan(v, key, maxEdits)
-    v.prefixCache.synchronized(Option(v.prefixCache.get(cacheKey))) match {
-      case Some(hit) => return hit
-      case None      =>
-    }
-    val terms = scan.collect().toSeq
-    v.prefixCache.synchronized(v.prefixCache.put(cacheKey, terms))
-    terms
-  }
-
-  private[query] def expandWildcard(key: String): Seq[String] =
-    expandWildcard(view, key)
 
   /** Lucene wildcard (`te?t`, `t*st`, `*ing`) dictionary expansion —
     * [[QueryResolve.dictWildcard]] is the in-memory twin. The pattern's
@@ -481,27 +437,12 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     var scan = fieldTermScan(v, fieldPfx)
     val lit = fieldPfx + Glob.literalPrefix(pat)
     if (lit.length > fieldPfx.length)
-      scan = scan.filter($"term" >= lit && $"term" < lit + "￿")
+      scan = scan.filter($"term" >= lit && $"term" < lit + "\uffff")
     val pfxLen = fieldPfx.length
     (scan.select($"term").distinct().as[String]
       .filter(t => Glob.matches(t.substring(pfxLen), pat))
       .orderBy($"term").limit(QueryResolve.MaxPrefixExpansion), key)
   }
-
-  private def expandWildcard(v: IndexView, key: String): Seq[String] = {
-    val (scan, cacheKey) = wildcardScan(v, key)
-    v.prefixCache.synchronized(Option(v.prefixCache.get(cacheKey))) match {
-      case Some(hit) => return hit
-      case None      =>
-    }
-    val terms = scan.collect().toSeq
-    v.prefixCache.synchronized(v.prefixCache.put(cacheKey, terms))
-    terms
-  }
-
-  private[query] def expandTermRange(fieldPfx: String, lo: Option[String],
-      hi: Option[String], incLo: Boolean, incHi: Boolean): Seq[String] =
-    expandTermRange(view, fieldPfx, lo, hi, incLo, incHi)
 
   /** Lucene term-range (`text:[aa TO ab]`) dictionary expansion —
     * [[QueryResolve.dictRange]] is the in-memory twin. The purest pushdown
@@ -531,37 +472,43 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       .limit(QueryResolve.MaxPrefixExpansion).as[String], cacheKey)
   }
 
-  /** Plan-audit hook (ExplainCheck): the term-range dictionary scan must
-    * show both bounds pushed to parquet.
+  /** Plan-audit hooks (ExplainCheck): physical plans of the dictionary
+    * scans. The prefix and term-range scans must show their bounds reaching
+    * the parquet reader as PushedFilters (no full-vocabulary decode); a
+    * field-qualified fuzzy key must show its `title:` StartsWith pushed; a
+    * wildcard with a literal prefix must show the term-range pushdown.
     */
+  def prefixScanPlan(prefix: String): String =
+    prefixScan(view, prefix).queryExecution.executedPlan.toString
+  def fuzzyScanPlan(key: String, maxEdits: Int): String =
+    fuzzyScan(view, key, maxEdits)._1.queryExecution.executedPlan.toString
+  def wildcardScanPlan(key: String): String =
+    wildcardScan(view, key)._1.queryExecution.executedPlan.toString
   def termRangeScanPlan(fieldPfx: String, lo: Option[String],
       hi: Option[String], incLo: Boolean, incHi: Boolean): String =
     rangeScan(view, fieldPfx, lo, hi, incLo, incHi)
       ._1.queryExecution.executedPlan.toString
 
-  private def expandTermRange(v: IndexView, fieldPfx: String,
-      lo: Option[String], hi: Option[String], incLo: Boolean,
-      incHi: Boolean): Seq[String] = {
-    val (scan, cacheKey) = rangeScan(v, fieldPfx, lo, hi, incLo, incHi)
-    v.prefixCache.synchronized(Option(v.prefixCache.get(cacheKey))) match {
-      case Some(hit) => return hit
-      case None      =>
-    }
-    val terms = scan.collect().toSeq
-    v.prefixCache.synchronized(v.prefixCache.put(cacheKey, terms))
-    terms
-  }
+  // the prefix scan is planned only on a miss; the others pay their plan
+  // first because it also renders their cache key
+  private def expandPrefix(v: IndexView, prefix: String): Seq[String] =
+    cached(v.prefixCache, prefix)(prefixScan(v, prefix).collect().toSeq)
+
+  private def expandScan(v: IndexView,
+      scanAndKey: (Dataset[String], String)): Seq[String] =
+    cached(v.prefixCache, scanAndKey._2)(scanAndKey._1.collect().toSeq)
 
   /** The four dictionary-expansion rules over one index snapshot. */
   private def expander(v: IndexView): QueryResolve.Expander =
     new QueryResolve.Expander {
       def prefix(key: String): Seq[String] = expandPrefix(v, key)
       def fuzzy(key: String, maxEdits: Int): Seq[String] =
-        expandFuzzy(v, key, maxEdits)
-      def wildcard(key: String): Seq[String] = expandWildcard(v, key)
+        expandScan(v, fuzzyScan(v, key, maxEdits))
+      def wildcard(key: String): Seq[String] =
+        expandScan(v, wildcardScan(v, key))
       def range(fieldPfx: String, lo: Option[String], hi: Option[String],
           incLo: Boolean, incHi: Boolean): Seq[String] =
-        expandTermRange(v, fieldPfx, lo, hi, incLo, incHi)
+        expandScan(v, rangeScan(v, fieldPfx, lo, hi, incLo, incHi))
     }
 
   // ------------------------------------------------------- filter predicates
@@ -583,49 +530,73 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     preds.reduceOption(_ && _)
   }
 
-  private def filterKey(ast: QueryAst): String =
-    s"${ast.langFilter}|${ast.urlFilter}|${ast.rangeFilters}"
-
-  /** Collect a filter's matching docIds onto the driver, hard-capped.
-    * Some(sorted ids) if the filter fits; None = too large for the driver →
-    * caller must use the distributed path.
+  /** At most MaxDriverFilterDocs docIds of a one-column docId frame,
+    * sorted; None = too large for the driver.
     */
-  private def boundedFilterIds(v: IndexView, key: String,
-      pred: Column): Option[Array[Long]] = {
-    v.filterCache.synchronized(Option(v.filterCache.get(key))) match {
-      case Some(hit) => return Some(hit)
-      case None      =>
-    }
-    val ids = v.docs.filter(pred).select($"docId").as[Long]
-      .limit(QueryEngine.MaxDriverFilterDocs + 1).collect()
-    if (ids.length > QueryEngine.MaxDriverFilterDocs) None
-    else {
-      java.util.Arrays.sort(ids)
-      v.filterCache.synchronized(v.filterCache.put(key, ids))
-      Some(ids)
-    }
+  private def boundedIds(ids: DataFrame): Option[Array[Long]] = {
+    val a = ids.as[Long].limit(QueryEngine.MaxDriverFilterDocs + 1).collect()
+    if (a.length > QueryEngine.MaxDriverFilterDocs) None
+    else { java.util.Arrays.sort(a); Some(a) }
   }
 
-  private def boundedTombstoneIds(v: IndexView): Option[Array[Long]] = {
-    tombstones(v) match {
-      case None => Some(Array.empty[Long])
-      case Some(t) =>
-        val ids = t.select($"docId").as[Long]
-          .limit(QueryEngine.MaxDriverFilterDocs + 1).collect()
-        if (ids.length > QueryEngine.MaxDriverFilterDocs) None
-        else { java.util.Arrays.sort(ids); Some(ids) }
+  /** filterCache key of one driver filter set: its scope (q's stored-field
+    * filters, or "fq" for a single term fq) plus everything its docId set
+    * depends on — the fq strings, df and qOp. Parts are length-prefixed, so
+    * no two part lists share a key whatever characters the strings hold.
+    */
+  private def filterCacheKey(scope: String, fq: Seq[String], df: String,
+      qOp: String): String =
+    (scope +: df +: qOp +: fq).map(p => s"${p.length}:$p").mkString
+
+  /** Driver-side filter structures of one query on a snapshot, for the
+    * match-all page walk and the driver WAND offer test ([[admits]]):
+    *  - allow arrays: the stored-field predicate (q's filters + pure-filter
+    *    fqs) as one sorted array, each term fq another; a doc must appear
+    *    in EVERY array (fq intersection semantics). Each set reads through
+    *    the view's filterCache — Solr's filterCache: first use pays the
+    *    match-set job, repeats are a map lookup;
+    *  - deny ids: the tombstones, re-read on every query. Deletes do not
+    *    flip the pointer, so a per-view copy would show deleted docs again.
+    * None = some set is over the driver cap → the caller takes the
+    * relational/distributed plan instead of materializing it.
+    */
+  private def driverFilters(v: IndexView, ast: QueryAst, fq: Seq[String],
+      df: String, qOp: String): Option[(Seq[Array[Long]], Array[Long])] = {
+    def cachedIds(key: String)(ids: => DataFrame): Option[Array[Long]] =
+      cached(v.filterCache, key, (_: Option[Array[Long]]).isDefined)(
+        boundedIds(ids))
+    val (fqPreds, fqTermAsts) = fqSplit(fq, df, qOp)
+    val scope = s"${ast.langFilter}|${ast.urlFilter}|${ast.rangeFilters}"
+    val predIds: Option[Seq[Array[Long]]] =
+      (filterPredicate(ast).toSeq ++ fqPreds).reduceOption(_ && _) match {
+        case None    => Some(Nil)
+        case Some(p) =>
+          cachedIds(filterCacheKey(scope, fq, df, qOp))(
+            v.docs.filter(p).select($"docId")).map(Seq(_))
+      }
+    val allow = fqTermAsts.foldLeft(predIds) { case (acc, (s, fqAst)) =>
+      acc.flatMap(arrs => cachedIds(filterCacheKey("fq", Seq(s), df, qOp))(
+        fqMatchSet(v, fqAst)).map(arrs :+ _))
     }
+    val deny = tombstones(v).fold(Option(Array.empty[Long]))(boundedIds)
+    for (a <- allow; d <- deny) yield (a, d)
   }
+
+  /** The driver offer test: `id` is in every sorted allow array and not in
+    * the sorted deny array.
+    */
+  private def admits(allow: Seq[Array[Long]], deny: Array[Long])(
+      id: Long): Boolean =
+    allow.forall(a => java.util.Arrays.binarySearch(a, id) >= 0) &&
+      (deny.isEmpty || java.util.Arrays.binarySearch(deny, id) < 0)
 
   // ---------------------------------------------------------------- WAND
 
   def searchWand(q: String, k: Int, df: String = "text",
       after: Option[Wand.Scored] = None, fq: Seq[String] = Nil,
       qOp: String = "OR", qf: Seq[(String, Double)] = Nil,
-      tie: Double = 0.0): DataFrame = {
-    refreshIfStale()
-    searchWandV(view, q, k, df, after, fq, qOp, qf, tie)
-  }
+      tie: Double = 0.0): DataFrame =
+    searchWandV(snapshot(), q, k, df, after, fq, qOp, qf, tie)
 
   /** Split parsed fqs into (pure stored-field predicates — mergeable into
     * the docs-table filter for free) and (term-bearing asts — each a match
@@ -657,26 +628,6 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
   private def fqMatchSet(v: IndexView, ast: QueryAst): DataFrame =
     scoredCandidates(ast, v, needScores = false).select($"docId")
 
-  /** Driver-side bounded docId set of a term fq, cached per (fq, df, qOp)
-    * string in the view's filterCache (the Solr filterCache role). None =
-    * over the driver cap → caller takes the distributed path.
-    */
-  private def boundedFqIds(v: IndexView, key: String,
-      ast: QueryAst): Option[Array[Long]] = {
-    v.filterCache.synchronized(Option(v.filterCache.get(key))) match {
-      case Some(hit) => return Some(hit)
-      case None      =>
-    }
-    val ids = fqMatchSet(v, ast).as[Long]
-      .limit(QueryEngine.MaxDriverFilterDocs + 1).collect()
-    if (ids.length > QueryEngine.MaxDriverFilterDocs) None
-    else {
-      java.util.Arrays.sort(ids)
-      v.filterCache.synchronized(v.filterCache.put(key, ids))
-      Some(ids)
-    }
-  }
-
   /** [[searchWand]] against an explicit snapshot — lets composite
     * operations (MLT: term selection + search) evaluate BOTH halves on ONE
     * IndexView instead of re-reading the volatile between them.
@@ -689,34 +640,20 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val ast = QueryParser.parse(q, df, qOp, qf, tie)
     if (ast.matchAll) {
       // match-all needs no WAND. Driver fast path first (review r5): when
-      // the fq predicates, every term-fq match set, and the tombstone set
-      // are all bounded, the page is an intersection of per-view CACHED
-      // sorted docId arrays — the filterCache-hit shape term queries get;
-      // repeated `q=*:* fq=…` costs zero Spark jobs after the first use.
-      val (fqPredsMa, fqTermAstsMa) = fqSplit(fq, df, qOp)
-      val predMa = fqPredsMa.reduceOption(_ && _)
-      // a zero driver threshold (--distributed) forces the relational plan
-      // here too, keeping the flag's force-the-distributed-shape contract
-      val predIdsOpt: Option[Seq[Array[Long]]] =
-        if (DriverWandMaxSegments <= 0) None
-        else predMa match {
-          case None    => Some(Nil)
-          case Some(p) =>
-            boundedFilterIds(v,
-              "ma|" + df + "|" + qOp + "|" + fq.mkString("\u0000"), p)
-              .map(Seq(_))
-        }
-      val allowOpt = fqTermAstsMa.foldLeft(predIdsOpt) {
-        case (acc, (s, fqAst)) => acc.flatMap(arrs =>
-          boundedFqIds(v, "fq|" + df + "|" + qOp + "|" + s, fqAst)
-            .map(arrs :+ _))
-      }
-      (allowOpt, boundedTombstoneIds(v)) match {
-        case (Some(allow), Some(deny)) if allow.nonEmpty =>
+      // the fq filter sets and the tombstone set are all bounded, the page
+      // is an intersection of per-view CACHED sorted docId arrays, so a
+      // repeated `q=*:* fq=…` costs zero Spark jobs after the first use. A
+      // zero driver threshold (--distributed) forces the relational plan
+      // here too, keeping the flag's force-the-distributed-shape contract.
+      val filters =
+        if (driverWandMaxSegments <= 0) None
+        else driverFilters(v, ast, fq, df, qOp)
+      filters match {
+        case Some((allow, deny)) if allow.nonEmpty =>
           // the smallest allow array drives; arrays are sorted, and with
           // every score a constant 1.0 ascending docId IS the rank order
           val base = allow.minBy(_.length)
-          val rest = allow.filterNot(_ eq base)
+          val inRest = admits(allow.filterNot(_ eq base), deny) _
           val pass: Long => Boolean = after match {
             case None    => _ => true
             case Some(a) =>
@@ -724,33 +661,15 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
               else if (a.score == 1.0) id => id > a.docId
               else _ => false // every match scores exactly 1.0
           }
-          val out = Seq.newBuilder[Wand.Scored]
-          var taken = 0
-          var i = 0
-          while (i < base.length && taken < k) {
-            val id = base(i)
-            if (pass(id) &&
-                rest.forall(a =>
-                  java.util.Arrays.binarySearch(a, id) >= 0) &&
-                (deny.isEmpty ||
-                  java.util.Arrays.binarySearch(deny, id) < 0)) {
-              out += Wand.Scored(id, 1.0)
-              taken += 1
-            }
-            i += 1
-          }
-          return out.result().toDS().toDF()
+          return base.iterator.filter(id => pass(id) && inRest(id)).take(k)
+            .map(Wand.Scored(_, 1.0)).toSeq.toDS().toDF()
         case _ => // something unbounded, or no fq at all → relational plan
       }
       // relational fallback: docs-table docId scan (constant score 1.0)
       // ∖ tombstones, ∩ fq match sets, TakeOrderedAndProject(k) — the same
       // plan at any parallelism, so driver/distributed/exhaustive agree
-      var cands = applyFq(v, fq, df, qOp)(scoredCandidates(ast, v))
-      after.foreach { a =>
-        cands = cands.filter($"score" < a.score ||
-          ($"score" === a.score && $"docId" > a.docId))
-      }
-      return cands.orderBy(desc("score"), asc("docId")).limit(k)
+      return rankPage(applyFq(v, fq, df, qOp)(scoredCandidates(ast, v)),
+        after, k)
     }
     val rq = QueryResolve.resolve(ast, expander(v))
     val scoring = rq.scoringTerms // distinct + sorted by resolve
@@ -759,67 +678,39 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     if (scoring.isEmpty || clauses.isEmpty) return emptyResult
     val n = v.stats.n
     val avgdls = avgdlOf(v.stats)
-    // pure-filter fqs conjunct into the stored-field predicate (free);
-    // term fqs become allow sets alongside it
-    val (fqPreds, fqTermAsts) = fqSplit(fq, df, qOp)
-    val pred = (filterPredicate(ast).toSeq ++ fqPreds).reduceOption(_ && _)
-    def fqCacheKey(fqStr: String): String =
-      "fq|" + df + "|" + qOp + "|" + fqStr
 
     // plan construction alone costs 10s of ms — build only on cache miss
     lazy val segs = postingsFor(scoring ++ not, v)
 
     // small-query fast path: k·segments fits on the driver → skip the
-    // shuffle + global-sort stages entirely (one scan job, cached)
-    val cacheKey = (scoring ++ not).mkString("\u0000")
-    val sample = v.segCache.synchronized(Option(v.segCache.get(cacheKey))) match {
-      case Some(hit) => hit
-      case None =>
-        val fetched = segs.take(DriverWandMaxSegments + 1)
-        if (fetched.length <= DriverWandMaxSegments)
-          v.segCache.synchronized(v.segCache.put(cacheKey, fetched))
-        fetched
-    }
-    if (sample.length <= DriverWandMaxSegments) {
-      // bounded-collect filter structures; a too-large filter, fq match
-      // set, or tombstone set falls through to the distributed path
-      // instead of materializing. The stored-field predicate contributes
-      // one sorted array, each term fq another; a doc must appear in
-      // EVERY allow array (fq intersection semantics).
-      val predIdsOpt: Option[Seq[Array[Long]]] = pred match {
-        case None    => Some(Nil)
-        case Some(p) =>
-          val key = filterKey(ast) + fqPreds.length + "|" + fq.mkString("\u0000")
-          boundedFilterIds(v, key, p).map(Seq(_))
-      }
-      val allowIdsOpt: Option[Seq[Array[Long]]] =
-        fqTermAsts.foldLeft(predIdsOpt) { case (acc, (s, fqAst)) =>
-          acc.flatMap(arrs =>
-            boundedFqIds(v, fqCacheKey(s), fqAst).map(arrs :+ _))
-        }
-      val denyIdsOpt = boundedTombstoneIds(v)
-      (allowIdsOpt, denyIdsOpt) match {
-        case (Some(allowArrs), Some(denyIds)) =>
+    // shuffle + global-sort stages entirely (one scan job, cached only
+    // under the threshold)
+    val sample = cached(v.segCache, (scoring ++ not).mkString("\u0000"),
+      (_: Array[PostingSegment]).length <= driverWandMaxSegments)(
+      segs.take(driverWandMaxSegments + 1))
+    if (sample.length <= driverWandMaxSegments) {
+      driverFilters(v, ast, fq, df, qOp) match {
+        case Some((allow, deny)) =>
           val byTerm = sample.toSeq.groupBy(_.term)
           val dfByTerm = byTerm.map { case (t, ss) =>
             t -> ss.map(_.count.toLong).sum
           }
           val allowFn: Option[Long => Boolean] =
-            if (allowArrs.isEmpty && denyIds.isEmpty) None
-            else Some { id =>
-              allowArrs.forall(a =>
-                java.util.Arrays.binarySearch(a, id) >= 0) &&
-              (denyIds.isEmpty || java.util.Arrays.binarySearch(denyIds, id) < 0)
-            }
+            if (allow.isEmpty && deny.isEmpty) None
+            else Some(admits(allow, deny))
           val top = Wand.topK(byTerm, dfByTerm, scoring, clauses,
             n, avgdls, k, 0L, Long.MaxValue, allowFn, rq.boosts, after,
             rq.groups, rq.tie)
           return top.toSeq.toDS().toDF()
-        case _ => // fall through to the distributed path
+        case None => // a filter set over the cap → distributed path
       }
     }
 
     // ---- distributed windowed WAND ----
+    // pure-filter fqs conjunct into the stored-field predicate (free);
+    // term fqs become allow sets alongside it
+    val (fqPreds, fqTermAsts) = fqSplit(fq, df, qOp)
+    val pred = (filterPredicate(ast).toSeq ++ fqPreds).reduceOption(_ && _)
     // global per-term df: sum of segment counts over ALL the term's segments
     // (tiny agg over the pruned scan; needed before windowing because a
     // window only sees its overlapping segments)
@@ -839,12 +730,8 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val rangeLen = math.min(
       math.max(1L, (idSpace + parallelism - 1) / parallelism), 1L << 26)
 
-    val clausesB = clauses
-    val scoringB = scoring
-    val avgdlsB = avgdls
-    val kB = k
+    // hoisted so task closures do not capture the whole ResolvedQuery
     val boostsB = rq.boosts
-    val afterB = after
     val groupsB = rq.groups
     val tieB = rq.tie
 
@@ -891,9 +778,9 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
         segWin.groupByKey(_._1).flatMapGroups { (rid, it) =>
           val byTerm = it.map(_._2).toSeq.groupBy(_.term)
           val lo = rid * rangeLen
-          Wand.topK(byTerm, bDf.value, scoringB, clausesB,
-            n, avgdlsB, kB, lo, lo + rangeLen, None, boostsB,
-            afterB, groupsB, tieB).iterator
+          Wand.topK(byTerm, bDf.value, scoring, clauses,
+            n, avgdls, k, lo, lo + rangeLen, None, boostsB,
+            after, groupsB, tieB).iterator
         }
       case Some(fr) =>
         // cogroup: each window task gets its own filter slice as a
@@ -927,16 +814,14 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
                   (dBs == null || !dBs.get(off))
                 }
               val byTerm = segsHere.groupBy(_.term)
-              Wand.topK(byTerm, bDf.value, scoringB, clausesB,
-                n, avgdlsB, kB, lo, hi, allowFn, boostsB, afterB,
+              Wand.topK(byTerm, bDf.value, scoring, clauses,
+                n, avgdls, k, lo, hi, allowFn, boostsB, after,
                 groupsB, tieB).iterator
             }
         }
     }
 
-    perWindow.toDF()
-      .orderBy(desc("score"), asc("docId"))
-      .limit(k)
+    rankPage(perWindow.toDF(), None, k)
   }
 
   // ---------------------------------------------------------- exhaustive
@@ -967,37 +852,24 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       after: Option[Wand.Scored] = None, fq: Seq[String] = Nil,
       qOp: String = "OR", qf: Seq[(String, Double)] = Nil,
       tie: Double = 0.0): DataFrame = {
-    refreshIfStale()
-    val v = view // one snapshot for the query and every fq match set
+    val v = snapshot() // one snapshot for the query and every fq match set
     val ast = QueryParser.parse(q, df, qOp, qf, tie)
     // fq constraint = semi-join per source; scores are untouched (the
     // q-vs-fq split: fq never contributes score)
-    var cands = applyFq(v, fq, df, qOp)(scoredCandidates(ast, v))
-    // searchAfter anchor: scores are bit-identical across paths, so the
-    // double-equality branch of the rank comparison is exact here too
-    after.foreach { a =>
-      cands = cands.filter($"score" < a.score ||
-        ($"score" === a.score && $"docId" > a.docId))
-    }
-    cands.orderBy(desc("score"), asc("docId")).limit(k)
+    rankPage(applyFq(v, fq, df, qOp)(scoredCandidates(ast, v)), after, k)
   }
 
-  /** All matching (docId, score) as a DataFrame — the pure-Catalyst match
-    * set behind searchExhaustive and facet. One pruned scan of every query
-    * term (scoring + negative), a per-doc fold in term-sorted order
-    * (bit-identical scores at any parallelism), and clause evaluation that
-    * splits on phrase presence (VERDICT r4 #4): phrase-FREE queries — the
-    * shape facet() sends to production — run entirely in codegen
-    * (collect_set + arrays_overlap, no positions decoded or shipped);
-    * only queries that actually contain a phrase take the positions-
-    * collecting UDF path, the slow regression anchor.
+  /** The k candidates ranking strictly after the searchAfter anchor in
+    * (-score, docId) order — one TakeOrderedAndProject. Scores are
+    * bit-identical across paths, so the double-equality branch of the rank
+    * comparison is exact.
     */
-  /** @param needScores false = match set only (facet/stats/sort consumers
-    *   discard scores): BM25 per-posting arithmetic, the df broadcast's
-    *   score use, and the whole per-doc term-sorted fold are skipped — the
-    *   groupBy aggregates just collect_set(term) for clause evaluation and
-    *   the returned frame has docId only.
-    */
+  private def rankPage(cands: DataFrame, after: Option[Wand.Scored],
+      k: Int): DataFrame =
+    after.fold(cands)(a => cands.filter($"score" < a.score ||
+        ($"score" === a.score && $"docId" > a.docId)))
+      .orderBy(desc("score"), asc("docId")).limit(k)
+
   /** Deterministic per-doc score fold over the collected (term, score)
     * contributions: ordered aggregate over the term-sorted array —
     * bit-identical to the WAND scoreAt loop and the oracle at any
@@ -1037,6 +909,22 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     }
   }
 
+  /** All matching (docId, score) as a DataFrame — the pure-Catalyst match
+    * set behind searchExhaustive and every match-set consumer. One pruned
+    * scan of every query term (scoring + negative), a per-doc fold in
+    * term-sorted order (bit-identical scores at any parallelism), and
+    * clause evaluation that splits on phrase presence (VERDICT r4 #4):
+    * phrase-FREE queries — the shape facet() sends to production — run
+    * entirely in codegen (collect_set + arrays_overlap, no positions
+    * decoded or shipped); only queries that actually contain a phrase take
+    * the positions-collecting UDF path, the slow regression anchor.
+    *
+    * @param needScores false = match set only (facet/stats/sort consumers
+    *   discard scores): BM25 per-posting arithmetic, the df broadcast's
+    *   score use, and the whole per-doc term-sorted fold are skipped — the
+    *   groupBy aggregates just collect_set(term) for clause evaluation and
+    *   the returned frame has docId only.
+    */
   private def scoredCandidates(ast: QueryAst, v: IndexView,
       needScores: Boolean = true): DataFrame = {
     if (ast.matchAll) {
@@ -1070,10 +958,8 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       .as[(String, Long)].collect().toMap
     val bDf = spark.sparkContext.broadcast(dfByTerm)
 
-    val nB = n
     val scoringSet = scoring.toSet
-    val phraseTermsB = phraseTerms
-    val boostsB = rq.boosts
+    val boostsB = rq.boosts // hoisted: closures must not capture rq
     val hasPhrases = clauses.exists(_.phrases.nonEmpty)
 
     var scored: DataFrame = if (!hasPhrases) {
@@ -1081,12 +967,11 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       // are never decoded, never shipped, never collected, and clause
       // evaluation is a pure Catalyst predicate over the per-doc term set
       // (arrays_overlap, codegen'd) — no UDF anywhere in the plan
-      val scoresOn = needScores
       val rows = postingsFor(allTerms, v).flatMap { s =>
-        val idfv = BM25.idf(nB, bDf.value(s.term)) *
+        val idfv = BM25.idf(n, bDf.value(s.term)) *
           boostsB.getOrElse(s.term, 1.0)
         val avg = avgdls(s.term)
-        val isScoring = scoresOn && scoringSet.contains(s.term)
+        val isScoring = needScores && scoringSet.contains(s.term)
         val (ids, tfs, dls) = PostingCodec.decodeAll(s)
         Iterator.tabulate(s.count) { i =>
           (ids(i), s.term,
@@ -1118,13 +1003,12 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       // phrase terms and evaluate clauses with the shared matcher over the
       // doc's collected (term, positions) list — the slow regression-anchor
       // shape, reached only when the query actually contains a phrase
-      val scoresOn = needScores
       val rows = postingsFor(allTerms, v).flatMap { s =>
-        val idfv = BM25.idf(nB, bDf.value(s.term)) *
+        val idfv = BM25.idf(n, bDf.value(s.term)) *
           boostsB.getOrElse(s.term, 1.0)
         val avg = avgdls(s.term)
-        val isScoring = scoresOn && scoringSet.contains(s.term)
-        val needPos = phraseTermsB.contains(s.term)
+        val isScoring = needScores && scoringSet.contains(s.term)
+        val needPos = phraseTerms.contains(s.term)
         val (ids, tfs, dls) = PostingCodec.decodeAll(s)
         val poss = if (needPos) PostingCodec.decodePositions(s) else null
         Iterator.tabulate(s.count) { i =>
@@ -1170,11 +1054,26 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     scored
   }
 
+  /** The match set every consumer below starts from: q's matching docIds
+    * (plus `score` when needScores) under fq — same df AND q.op as the
+    * hits, since Solr's q.op is a global request param — joined to the
+    * named docs-table columns when any are given. The caller passes the
+    * [[snapshot]] so it can run further reads against the same view.
+    */
+  private def matchSet(v: IndexView, q: String, df: String,
+      fq: Seq[String], qOp: String, qf: Seq[(String, Double)], tie: Double,
+      cols: Seq[String] = Nil, needScores: Boolean = false): DataFrame = {
+    val ms = applyFq(v, fq, df, qOp)(scoredCandidates(
+      QueryParser.parse(q, df, qOp, qf, tie), v, needScores))
+    if (cols.isEmpty) ms
+    else ms.join(v.docs.select(("docId" +: cols).map(col): _*), Seq("docId"))
+  }
+
   /** Query-time facet counts over ALL matching docs (the Solr facet.field
     * analog, SURVEY.md §2.6): match set → join to the docs table →
     * groupBy(field).count, ordered (count desc, value asc).
-    */
-  /** @param topN Solr facet.limit; @param minCount Solr facet.mincount —
+    *
+    * @param topN Solr facet.limit; @param minCount Solr facet.mincount —
     *   values with fewer matches are dropped BEFORE the limit cut (a
     *   HAVING on the count agg; 1 = Solr's effective default here, since
     *   only values present in the match set ever have a row).
@@ -1193,14 +1092,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       offset: Int = 0, qf: Seq[(String, Double)] = Nil, tie: Double = 0.0): DataFrame = {
     require(minCount >= 1, s"facet.mincount must be >= 1, got $minCount")
     require(offset >= 0, s"facet.offset must be >= 0, got $offset")
-    refreshIfStale()
-    val v = view // one snapshot for both the match set and the facet join
-    // same df AND q.op as the hits being faceted — Solr's q.op is a global
-    // request param, so the facet's match set must be the page's match set
-    val ast = QueryParser.parse(q, df, qOp, qf, tie)
-    val joined = applyFq(v, fq, df, qOp)(
-      scoredCandidates(ast, v, needScores = false).select($"docId"))
-      .join(v.docs.select($"docId", col(field)), Seq("docId"))
+    val joined = matchSet(snapshot(), q, df, fq, qOp, qf, tie, Seq(field))
     // prefix restricts BEFORE the agg: Catalyst pushes the StartsWith into
     // the docs-side scan, so a selective prefix shrinks the shuffle too
     val restricted = prefix.fold(joined)(p =>
@@ -1231,10 +1123,8 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       qOp: String = "OR", qf: Seq[(String, Double)] = Nil,
       tie: Double = 0.0): DataFrame = {
     require(subQueries.nonEmpty, "facet.query needs at least one sub-query")
-    refreshIfStale()
-    val v = view // one snapshot for the base and every sub match set
-    val base = applyFq(v, fq, df, qOp)(scoredCandidates(
-      QueryParser.parse(q, df, qOp, qf, tie), v, needScores = false).select($"docId"))
+    val v = snapshot() // one snapshot for the base and every sub match set
+    val base = matchSet(v, q, df, fq, qOp, qf, tie)
     val tagged = subQueries.zipWithIndex.map { case (s, i) =>
       // q.op applies to facet.query strings too (one global parser flag)
       val ast = QueryParser.parse(s, df, qOp)
@@ -1292,15 +1182,9 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     }
     require(sorts.map(_._1).distinct.size == sorts.size,
       s"sort lists a field twice: ${sorts.map(_._1).mkString(", ")}")
-    refreshIfStale()
-    val v = view
-    val ast = QueryParser.parse(q, df, qOp, qf, tie)
     val dirs = sorts.map { case (f, a) => if (a) asc(f) else desc(f) } :+
       asc("docId")
-    applyFq(v, fq, df, qOp)(scoredCandidates(ast, v, needScores = false)
-      .select($"docId"))
-      .join(v.docs.select(($"docId" +: sorts.map(s => col(s._1))): _*),
-        Seq("docId"))
+    matchSet(snapshot(), q, df, fq, qOp, qf, tie, sorts.map(_._1))
       .orderBy(dirs: _*)
       .limit(k)
   }
@@ -1328,14 +1212,9 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       QueryEngine.SortableFields.contains),
       s"export fl fields must be stored docs columns: " +
         s"${QueryEngine.SortableFields.toSeq.sorted.mkString(", ")}")
-    refreshIfStale()
-    val v = view
-    val ast = QueryParser.parse(q, df, qOp, qf, tie)
-    val cols = ("docId" +: (fields :+ sortField).distinct).map(col)
     val dir = if (ascending) asc(sortField) else desc(sortField)
-    applyFq(v, fq, df, qOp)(scoredCandidates(ast, v, needScores = false)
-      .select($"docId"))
-      .join(v.docs.select(cols: _*), Seq("docId"))
+    matchSet(snapshot(), q, df, fq, qOp, qf, tie,
+      (fields :+ sortField).distinct)
       .orderBy(dir, asc("docId"))
       .select(("docId" +: fields).distinct.map(col): _*)
   }
@@ -1354,12 +1233,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val startMs = java.time.Instant.parse(startIso).toEpochMilli
     val endMs = java.time.Instant.parse(endIso).toEpochMilli
     require(endMs > startMs, "facet.range end must be after start")
-    refreshIfStale()
-    val v = view
-    val ast = QueryParser.parse(q, df, qOp, qf, tie)
-    applyFq(v, fq, df, qOp)(scoredCandidates(ast, v, needScores = false)
-      .select($"docId"))
-      .join(v.docs.select($"docId", $"warc_ts"), Seq("docId"))
+    matchSet(snapshot(), q, df, fq, qOp, qf, tie, Seq("warc_ts"))
       .withColumn("ts_ms", unix_millis($"warc_ts"))
       .filter($"ts_ms" >= startMs && $"ts_ms" < endMs)
       .withColumn("bucket",
@@ -1388,12 +1262,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
         s"${QueryEngine.NumericFields.mkString(", ")})")
     require(gap > 0, "facet.range gap must be positive")
     require(end > start, "facet.range end must be after start")
-    refreshIfStale()
-    val v = view
-    val ast = QueryParser.parse(q, df, qOp, qf, tie)
-    applyFq(v, fq, df, qOp)(scoredCandidates(ast, v, needScores = false)
-      .select($"docId"))
-      .join(v.docs.select($"docId", col(field)), Seq("docId"))
+    matchSet(snapshot(), q, df, fq, qOp, qf, tie, Seq(field))
       .filter(col(field) >= start && col(field) < end)
       .withColumn("bucket_start",
         floor((col(field) - start) / gap).cast("long") * gap + start)
@@ -1405,15 +1274,14 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
   /** Solr stats-component analog (`stats.field=<numeric>`): count / min /
     * max / sum / mean of a stored numeric column over ALL matching docs.
     * One aggregation over the match-set join — no sort, no window.
-    */
-  /** @param percentiles Solr stats `percentiles=` analog: percentage
+    *
+    * @param percentiles Solr stats `percentiles=` analog: percentage
     *   points in (0, 100), each adding a `pNN` column with the EXACT
     *   interpolated percentile (Spark's sort-based `percentile`, linear
     *   interpolation at rank p·(n−1) — Solr itself approximates with
     *   t-digest; exactness here is a strict upgrade and keeps the oracle
     *   twin bit-checkable). Null when nothing matches, like min/max.
-    */
-  /** @param calcDistinct Solr stats.calcdistinct: append an exact
+    * @param calcDistinct Solr stats.calcdistinct: append an exact
     *   `countDistinct` column AFTER the percentiles (appended last so the
     *   fixed positions of the base schema never move).
     */
@@ -1427,9 +1295,6 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
         s"${QueryEngine.NumericFields.mkString(", ")})")
     require(percentiles.forall(p => p > 0.0 && p < 100.0),
       s"stats percentiles must be in (0, 100), got $percentiles")
-    refreshIfStale()
-    val v = view
-    val ast = QueryParser.parse(q, df, qOp, qf, tie)
     val pCols = percentiles.map { p =>
       expr(s"percentile($field, ${p / 100.0})")
         .as(QueryEngine.percentileColName(p))
@@ -1440,9 +1305,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val aggCols = Seq(count(lit(1)).as("cnt"), min(field).as("min"),
       max(field).as("max"), sum(field).as("sum"),
       avg(field).as("mean")) ++ pCols ++ dCols
-    applyFq(v, fq, df, qOp)(scoredCandidates(ast, v, needScores = false)
-      .select($"docId"))
-      .join(v.docs.select($"docId", col(field)), Seq("docId"))
+    matchSet(snapshot(), q, df, fq, qOp, qf, tie, Seq(field))
       .agg(aggCols.head, aggCols.tail: _*)
   }
 
@@ -1463,13 +1326,10 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       s"group field '$field' unsupported (string stored: " +
         s"${QueryEngine.GroupableFields.mkString(", ")})")
     require(kPerGroup > 0, "group.limit must be positive")
-    refreshIfStale()
-    val v = view
-    val ast = QueryParser.parse(q, df, qOp, qf, tie)
     val salts = 32
     import org.apache.spark.sql.expressions.Window
-    val joined = applyFq(v, fq, df, qOp)(scoredCandidates(ast, v))
-      .join(v.docs.select($"docId", col(field)), Seq("docId"))
+    val joined = matchSet(snapshot(), q, df, fq, qOp, qf, tie, Seq(field),
+      needScores = true)
     val w1 = Window.partitionBy(col(field), pmod($"docId", lit(salts)))
       .orderBy(desc("score"), asc("docId"))
     val w2 = Window.partitionBy(col(field))
@@ -1495,12 +1355,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     require(QueryEngine.GroupableFields.contains(field),
       s"group field '$field' unsupported (string stored: " +
         s"${QueryEngine.GroupableFields.mkString(", ")})")
-    refreshIfStale()
-    val v = view
-    val ast = QueryParser.parse(q, df, qOp, qf, tie)
-    applyFq(v, fq, df, qOp)(scoredCandidates(ast, v, needScores = false)
-      .select($"docId"))
-      .join(v.docs.select($"docId", col(field)), Seq("docId"))
+    matchSet(snapshot(), q, df, fq, qOp, qf, tie, Seq(field))
       .agg(countDistinct(col(field)).as("ngroups"))
       .collect().head.getLong(0)
   }
@@ -1521,13 +1376,9 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       QueryEngine.GroupableFields.contains(fieldB) && fieldA != fieldB,
       s"pivot fields must be distinct members of " +
         s"${QueryEngine.GroupableFields.mkString(", ")}")
-    refreshIfStale()
-    val v = view
-    val ast = QueryParser.parse(q, df, qOp, qf, tie)
     import org.apache.spark.sql.expressions.Window
-    val ab = applyFq(v, fq, df, qOp)(scoredCandidates(ast, v, needScores = false)
-      .select($"docId"))
-      .join(v.docs.select($"docId", col(fieldA), col(fieldB)), Seq("docId"))
+    val ab = matchSet(snapshot(), q, df, fq, qOp, qf, tie,
+      Seq(fieldA, fieldB))
       .groupBy(col(fieldA), col(fieldB)).agg(count(lit(1)).as("cnt"))
     val aTop = ab.groupBy(col(fieldA)).agg(sum($"cnt").as("a_cnt"))
       .orderBy(desc("a_cnt"), asc(fieldA)).limit(topA)
@@ -1556,8 +1407,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     */
   def interestingTerms(text: String, maxTerms: Int = 10, minTf: Int = 2,
       minDf: Long = 2L, df: String = "text"): Seq[String] = {
-    refreshIfStale()
-    interestingTermsV(view, text, maxTerms, minTf, minDf, df)
+    interestingTermsV(snapshot(), text, maxTerms, minTf, minDf, df)
   }
 
   private def interestingTermsV(v: IndexView, text: String, maxTerms: Int,
@@ -1593,8 +1443,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
   def moreLikeThisWithTerms(text: String, k: Int, maxTerms: Int = 10,
       minTf: Int = 2, minDf: Long = 2L, df: String = "text")
       : (Seq[String], DataFrame) = {
-    refreshIfStale()
-    val v = view
+    val v = snapshot()
     val terms = interestingTermsV(v, text, maxTerms, minTf, minDf, df)
     if (terms.isEmpty) (terms, emptyResult)
     else (terms, searchWandV(v, terms.mkString(" OR "), k, df, None))
@@ -1616,8 +1465,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     */
   def suggest(term: String, n: Int = 5, df: String = "text")
       : Seq[(String, Int, Long)] = {
-    refreshIfStale()
-    suggestV(view, term, n, df)
+    suggestV(snapshot(), term, n, df)
   }
 
   private def suggestV(v: IndexView, term: String, n: Int, df: String)
@@ -1627,7 +1475,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       s"suggest input '$term' must analyze to a single token")
     val key = QueryParser.termKey(df, toks(0))
     val pfxLen = key.length - toks(0).length
-    val cands = expandFuzzy(v, key, 2)
+    val cands = expandScan(v, fuzzyScan(v, key, 2))
     if (cands.isEmpty) return Seq.empty
     // postingsFor prunes the scan to the candidates' termBucket dirs
     // (review r5: a raw postings.filter planned all bucket dirs)
@@ -1648,14 +1496,9 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     * it explicitly, exactly like Solr's rows=0.
     */
   def countMatches(q: String, df: String = "text", fq: Seq[String] = Nil,
-      qOp: String = "OR", qf: Seq[(String, Double)] = Nil, tie: Double = 0.0): Long = {
-    refreshIfStale()
-    val v = view
-    applyFq(v, fq, df, qOp)(
-      scoredCandidates(QueryParser.parse(q, df, qOp, qf, tie), v,
-        needScores = false))
-      .count()
-  }
+      qOp: String = "OR", qf: Seq[(String, Double)] = Nil,
+      tie: Double = 0.0): Long =
+    matchSet(snapshot(), q, df, fq, qOp, qf, tie).count()
 
   /** Solr spellcheck.collate analog: rewrite the query with the TOP
     * suggestion for every EXACT scoring term absent from the dictionary,
@@ -1673,8 +1516,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     */
   def collate(q: String, df: String = "text", qOp: String = "OR")
       : Option[(String, Long)] = {
-    refreshIfStale()
-    val v = view // one snapshot: presence check, suggestions, hit count
+    val v = snapshot() // one snapshot: presence check, suggestions, hit count
     // collation is a spellcheck surface: qf does not apply (Suggest CLI)
     val ast = QueryParser.parse(q, df, qOp)
     if (ast.matchAll) return None
@@ -1720,8 +1562,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val toks = Analysis.tokenize(prefix)
     require(toks.length == 1,
       s"terms prefix '$prefix' must analyze to a single token")
-    refreshIfStale()
-    val v = view
+    val v = snapshot()
     val key = QueryParser.termKey(df, toks(0))
     val pfxLen = key.length - toks(0).length
     val cands = expandPrefix(v, key).take(n)
@@ -1751,8 +1592,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     // term (CLAUDE.md rule 8: per-element Pattern.compile is an allocation
     // storm over a large vocabulary)
     val rx = java.util.regex.Pattern.compile(pattern)
-    refreshIfStale()
-    val v = view
+    val v = snapshot()
     val fieldPfx = if (df == "text") "" else df + ":"
     // cache in the view's prefixCache like every dictionary expansion; the
     // NUL-separated key cannot collide with term keys or pattern keys
@@ -1761,17 +1601,11 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     // plain-prefix entry for the same string
     val cacheKey = "re\u0000" + df + "\u0000" + n + "\u0000" + pattern
     val pfxLen = fieldPfx.length
-    val matched: Seq[String] =
-      v.prefixCache.synchronized(Option(v.prefixCache.get(cacheKey))) match {
-        case Some(hit) => hit
-        case None =>
-          val terms = fieldTermScan(v, fieldPfx)
-            .select($"term").distinct().as[String]
-            .filter(t => rx.matcher(t.substring(pfxLen)).matches())
-            .orderBy($"term").limit(n).collect().toSeq
-          v.prefixCache.synchronized(v.prefixCache.put(cacheKey, terms))
-          terms
-      }
+    val matched = cached(v.prefixCache, cacheKey)(
+      fieldTermScan(v, fieldPfx)
+        .select($"term").distinct().as[String]
+        .filter(t => rx.matcher(t.substring(pfxLen)).matches())
+        .orderBy($"term").limit(n).collect().toSeq)
     if (matched.isEmpty) return Seq.empty
     val dfs = postingsFor(matched, v).toDF()
       .groupBy($"term").agg(sum($"count").as("df"))
@@ -1792,8 +1626,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     // same staleness guard as the search paths: after an auto-compaction
     // GC's segment dirs, planning over the old segdirs would throw
     // PATH_NOT_FOUND (and stale docsmap entries would point at dead files)
-    refreshIfStale()
-    val v = view // ONE capture: segdirs/docs below must be the same snapshot
+    val v = snapshot() // ONE capture: segdirs/docs below must agree
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val latest = IndexLayout.latestSegDir(spark, indexDir).toSeq
@@ -1856,8 +1689,8 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     * ~100 files, not one tiny file per page for every later query's
     * tombstone scan to union (compaction folds them regardless).
     * Returns docs deleted.
-    */
-  /** @param fq/@param qOp the SAME filter queries and default operator the
+    *
+    * @param fq/@param qOp the SAME filter queries and default operator the
     *   caller's search surface used — the delete must tombstone exactly the
     *   match set the user was shown (Solr deleteByQuery with fq: the
     *   canonical `q=*:* fq=...` wipe deletes the fq-constrained subset,

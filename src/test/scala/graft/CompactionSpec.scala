@@ -323,7 +323,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("queries racing appends never crash or see torn state") {
-    // hammer the ONE-volatile-IndexView contract: refreshIfStale swaps the
+    // hammer the ONE-volatile-IndexView contract: snapshot() swaps the
     // whole snapshot, so a query thread racing an append's pointer flip
     // must always land on a consistent (old or new) view — never a torn
     // mix of half-updated fields. Appends only (no compaction) keep this

@@ -268,6 +268,36 @@ class FqSpec extends AnyFunSuite {
       "facet fq+qop")
   }
 
+  test("cache hits launch no Spark job: after one warm call, a repeat of " +
+      "each cached shape runs 0 jobs") {
+    // the index has no tombstones: their ids are re-read on every query
+    val shapes: Seq[(String, Seq[String])] = Seq(
+      ("w00017", Nil),               // segCache
+      ("lang:no AND w00099", Nil),   // + stored-field filter ids
+      ("w00017 w00342", Seq("the")), // + term-fq ids
+      ("*:*", Seq("lang:no")),       // match-all: pure-filter fq ids
+      ("*:*", Seq("w00017 OR w00342")), // match-all: term-fq ids
+      ("w0099*", Nil))               // prefix expansion
+    val eng = new QueryEngine(spark, indexDir, conf.numBuckets)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try shapes.foreach { case (q, fq) =>
+      val warm = rows(eng.search(q, 10, fq = fq))
+      org.apache.spark.TestListenerBus.drain(sc)
+      jobs.set(0)
+      val repeat = rows(eng.search(q, 10, fq = fq))
+      org.apache.spark.TestListenerBus.drain(sc)
+      assert(jobs.get == 0, s"repeat of q=$q fq=$fq ran ${jobs.get} jobs")
+      assert(repeat == warm, s"q=$q fq=$fq: repeat differs from warm call")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("fq docId cache retires with the view: append + invalidate shows " +
       "new matches") {
     import java.nio.charset.StandardCharsets.UTF_8

@@ -423,7 +423,56 @@ object Bench {
           .forall(_ <= bestCanary * 1.5)
   }
 
+  /** Wall and process-CPU seconds of one headline op run. */
+  private[graft] final case class OpT(wall: Double, cpu: Double)
+
+  /** Run each op once: the times of the ops that completed, and the message
+    * of each op that threw. A failed op gets no time, so it can never pass
+    * for a fast one or count towards the total.
+    */
+  private[graft] def timeOps(ops: Seq[String], cpuSec: () => Double)(
+      run: String => Unit): (Seq[(String, OpT)], Seq[(String, String)]) = {
+    val times = Seq.newBuilder[(String, OpT)]
+    val errors = Seq.newBuilder[(String, String)]
+    ops.foreach { q =>
+      val cpu0 = cpuSec()
+      try {
+        val (_, t) = timeS(run(q))
+        times += q -> OpT(t, cpuSec() - cpu0)
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          errors += q -> s"${e.getClass.getName}: ${e.getMessage}"
+      }
+    }
+    (times.result(), errors.result())
+  }
+
+  /** The record's `op_errors` member: failed op → its message. */
+  private[graft] def opErrorsJson(errors: Seq[(String, String)]): String = {
+    def str(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    errors.map { case (k, m) => s"${str(k)}:${str(m)}" }
+      .mkString("\"op_errors\":{", ",", "}")
+  }
+
+  /** Exits non-zero when a headline op failed: its time is missing from the
+    * record, so the record must not pass for a complete one.
+    */
   def main(args: Array[String]): Unit = {
+    val opErrors = run()
+    if (opErrors.nonEmpty) {
+      System.err.println("[graft-bench] headline ops failed: " +
+        opErrors.map(_._1).mkString(", "))
+      sys.exit(1)
+    }
+  }
+
+  /** The bench sections; returns the headline ops that threw. */
+  private def run(): Seq[(String, String)] = {
     val tStart = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - tStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -445,11 +494,13 @@ object Bench {
     var totalVal = 0.0
     var opsDiagJson = ""
     var latencyJson = ""
+    var opErrors = Seq.empty[(String, String)]
     def emitRecord(): Unit = {
       val parts = Seq(s""""queries":$qsJson""", s""""sf":"$sfDir"""",
         buildJson) ++
         Option(opsDiagJson).filter(_.nonEmpty) ++
-        Option(latencyJson).filter(_.nonEmpty)
+        Option(latencyJson).filter(_.nonEmpty) ++
+        Option(opErrors).filter(_.nonEmpty).map(opErrorsJson)
       emit(f"""{"metric":"total","value":$totalVal%.3f,"unit":"sec",${parts.mkString(",")}}""")
     }
     emitRecord() // a parseable record exists from second zero
@@ -566,59 +617,62 @@ object Bench {
       }
     }
 
-    if (mode == "scaling") { runScaling(); return }
+    if (mode == "scaling") { runScaling(); return opErrors }
 
-    // ---- headline operator timings (fresh local[32], warm each plan on
-    //      sf0.001 first so we time the operator, not Janino). Every rep is
-    //      bracketed by a fixed CPU canary and every op records its process-
-    //      CPU seconds (VERDICT r3 item 1a/3: a slow wall time with flat CPU
-    //      and a slow canary is the BOX; rising CPU is the ENGINE) ----
-    val s32 = session(32)
+    // ---- headline operator timings (fresh session on the host's cores,
+    //      warm each plan on sf0.001 first so we time the operator, not
+    //      Janino). Every rep is bracketed by a fixed CPU canary and every op
+    //      records its process-CPU seconds (VERDICT r3 item 1a/3: a slow wall
+    //      time with flat CPU and a slow canary is the BOX; rising CPU is the
+    //      ENGINE). An op that throws goes to `op_errors`, not the times ----
+    val cores = MainCommon.hostCores
+    val sOps = session(cores)
     val osb = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     def sparkCanary(): Double = timeS {
       import org.apache.spark.sql.functions.{col, max => fmax, xxhash64}
       // max, not sum: summing random longs overflows under ANSI mode
-      s32.range(0, 100000000L, 1, 32)
+      sOps.range(0, 100000000L, 1, 32)
         .select(fmax(xxhash64(col("id")))).head()
     }._2
+    // the smallest fixture, beside the timed one
+    val warmDir = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
     headline.foreach { q =>
-      try SparkEntry.queries(q)(s32, "/root/testdata/sf0.001").count()
+      try SparkEntry.queries(q)(sOps, warmDir.toString).count()
       catch { case _: Throwable => }
     }
     sparkCanary() // warm the canary plan too
     val opsReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_OPS_REPS", "2").toInt
-    final case class OpT(wall: Double, cpu: Double)
-    val repRuns: Seq[(Double, Seq[(String, OpT)], Double)] =
+    val repRuns: Seq[(Double, Seq[(String, OpT)], Seq[(String, String)],
+        Double)] =
       (1 to opsReps).map { _ =>
         val c0 = sparkCanary()
-        val times = headline.map { q =>
-          val cpu0 = osb.getProcessCpuTime
-          val (_, t) = timeS {
-            try SparkEntry.queries(q)(s32, sfDir).count()
-            catch { case _: Throwable => -1L }
+        val (times, errors) =
+          timeOps(headline, () => osb.getProcessCpuTime / 1e9) { q =>
+            SparkEntry.queries(q)(sOps, sfDir).count()
           }
-          q -> OpT(t, (osb.getProcessCpuTime - cpu0) / 1e9)
-        }
         val c1 = sparkCanary()
-        (c0, times, c1)
+        (c0, times, errors, c1)
       }
+    // an op that failed in any rep has no trustworthy time
+    opErrors = repRuns.flatMap(_._3).distinctBy(_._1)
+    val failed = opErrors.map(_._1).toSet
     // per-op best wall across reps (the engine's speed is the quietest
     // window's number; every rep + canary stays in the diagnostics)
-    val queryTimes: Seq[(String, OpT)] = headline.map { q =>
+    val queryTimes: Seq[(String, OpT)] = headline.filterNot(failed).map { q =>
       q -> repRuns.map(_._2.toMap.apply(q)).minBy(_.wall)
     }
     val opsDiag = {
-      val canaries = repRuns.map { case (c0, _, c1) =>
+      val canaries = repRuns.map { case (c0, _, _, c1) =>
         f"[$c0%.3f,$c1%.3f]"
       }.mkString("[", ",", "]")
       val cpus = queryTimes.map { case (k, t) =>
         "\"" + k + f"""\":${t.cpu}%.3f""" }.mkString("{", ",", "}")
-      val allReps = repRuns.map { case (_, ts, _) =>
+      val allReps = repRuns.map { case (_, ts, _, _) =>
         ts.map { case (k, t) => "\"" + k + f"""\":${t.wall}%.3f""" }
           .mkString("{", ",", "}")
       }.mkString("[", ",", "]")
-      s""""ops_diag":{"reps":$opsReps,"canary_sec":$canaries,"cpu_sec":$cpus,"rep_wall":$allReps,"cores":32}"""
+      s""""ops_diag":{"reps":$opsReps,"canary_sec":$canaries,"cpu_sec":$cpus,"rep_wall":$allReps,"cores":$cores}"""
     }
 
     // section done: fold the ops numbers into the record and emit
@@ -627,14 +681,14 @@ object Bench {
     totalVal = queryTimes.map(_._2.wall).sum
     opsDiagJson = opsDiag
     emitRecord()
-    s32.stop()
-    if (mode == "ops") return
+    sOps.stop()
+    if (mode == "ops") return opErrors
 
     // ---- BM25 top-k latency over a built index (fresh session):
     //      p50 of the driver fast path over the golden set, plus p50 of the
     //      distributed windowed path (driverWandMaxSegments=0) ----
-    if (elapsedSec > totalBudgetSec - 360) return // ops record stands
-    val sq = session(32)
+    if (elapsedSec > totalBudgetSec - 360) return opErrors // ops record stands
+    val sq = session(cores)
     val osbQ = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val ixDir = freshDir("ix")
@@ -690,5 +744,6 @@ object Bench {
     //      mode=query stops here (ops + latency only). ----
     if (mode != "query") runScaling()
     emitRecord() // final line = the complete record (driver contract)
+    opErrors
   }
 }

@@ -87,9 +87,12 @@ object MainCommon {
     (vals.result(), rest.result())
   }
 
+  /** Cores a session runs on: SPARK_GRAFT_CPUS, else the host's. */
+  def hostCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString).toInt
+
   def session(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = hostCores.toString
     val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .appName(name)

@@ -12,9 +12,11 @@ import graft.index._
   *  - `searchExhaustive`: pure Catalyst plan — pruned postings scan → decode
   *    flatMap → per-doc deterministic score fold → filters →
   *    TakeOrderedAndProject. The regression anchor (SURVEY.md §7 step 3).
-  *  - `search` (default): distributed block-max WAND — the docId space is
-  *    sliced into disjoint windows, each task runs the BMW loop over lazily
-  *    block-decoded cursors, per-window top-k merge globally (exact because
+  *  - `search` (default): block-max WAND over lazily block-decoded cursors.
+  *    Small posting sets run on the driver; corpus-scale ones run as ONE
+  *    Spark job: the docId space is sliced into disjoint windows, one
+  *    shuffle partition each, every window task runs the BMW loop over its
+  *    slice, and the driver merges the ≤ windows × k results (exact because
   *    windows are disjoint).
   *
   * Both prune the postings scan to the query terms' buckets: the postings
@@ -24,10 +26,12 @@ import graft.index._
   *
   * Stored-field filters (`lang:` / `url:` / `[a TO b]` ranges) and delete
   * tombstones become per-doc allow/deny predicates inside the WAND loop:
-  *  - distributed path: the filtered docs table is keyed by docId window and
-  *    COGROUPED with the posting segments — each window task receives only
-  *    its own slice as a window-local bitmap. No driver materialization, no
-  *    unbounded broadcast, no 2^31-docId assumption, at any selectivity.
+  *  - distributed path: the allow docIds and the tombstone docIds are keyed
+  *    by docId window and travel in the SAME shuffle as the posting
+  *    segments (and each map partition's partial per-term df, so every
+  *    window sums the exact global df) — each window task builds its own
+  *    slice as a window-local bitmap. No driver materialization, no
+  *    broadcast, no 2^31-docId assumption, at any selectivity.
   *  - driver fast path: filter docIds are collected only up to a hard cap
   *    ([[QueryEngine.MaxDriverFilterDocs]]); a larger filter silently routes
   *    the query to the distributed path. The cap bounds driver memory
@@ -40,10 +44,11 @@ import graft.index._
   *
   * @param driverWandMaxSegments segment-row threshold under which WAND runs
   *   on the driver: each row is one compressed segment (≤ segmentMaxDocs
-  *   postings), so the collected working set is small and two Spark stages
-  *   of scheduling latency are saved. Above it, the distributed windowed
-  *   path takes over — the same split a coordinator/shard search engine
-  *   makes. 0 forces the distributed shape.
+  *   postings), so the collected working set is small and the query costs
+  *   one cached scan instead of a shuffle job. Above it, the distributed
+  *   windowed job takes over — the same split a coordinator/shard search
+  *   engine makes (one fan-out, one coordinator merge). 0 forces the
+  *   distributed shape and skips the segment-count probe.
   */
 final class QueryEngine(spark: SparkSession, indexDir: String,
     numBuckets: Int = 32, driverWandMaxSegments: Int = 256,
@@ -683,145 +688,85 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     lazy val segs = postingsFor(scoring ++ not, v)
 
     // small-query fast path: k·segments fits on the driver → skip the
-    // shuffle + global-sort stages entirely (one scan job, cached only
-    // under the threshold)
-    val sample = cached(v.segCache, (scoring ++ not).mkString("\u0000"),
-      (_: Array[PostingSegment]).length <= driverWandMaxSegments)(
-      segs.take(driverWandMaxSegments + 1))
-    if (sample.length <= driverWandMaxSegments) {
-      driverFilters(v, ast, fq, df, qOp) match {
-        case Some((allow, deny)) =>
-          val byTerm = sample.toSeq.groupBy(_.term)
-          val dfByTerm = byTerm.map { case (t, ss) =>
-            t -> ss.map(_.count.toLong).sum
-          }
-          val allowFn: Option[Long => Boolean] =
-            if (allow.isEmpty && deny.isEmpty) None
-            else Some(admits(allow, deny))
-          val top = Wand.topK(byTerm, dfByTerm, scoring, clauses,
-            n, avgdls, k, 0L, Long.MaxValue, allowFn, rq.boosts, after,
-            rq.groups, rq.tie)
-          return top.toSeq.toDS().toDF()
-        case None => // a filter set over the cap → distributed path
-      }
+    // shuffle stage entirely (one scan job, cached only under the
+    // threshold). A zero threshold (--distributed) sends every query to the
+    // distributed path, so it skips the probe job too.
+    val sample: Option[Array[PostingSegment]] =
+      if (driverWandMaxSegments <= 0) None
+      else Some(cached(v.segCache, (scoring ++ not).mkString("\u0000"),
+        (_: Array[PostingSegment]).length <= driverWandMaxSegments)(
+        segs.take(driverWandMaxSegments + 1)))
+    val driverInput = for {
+      s <- sample if s.length <= driverWandMaxSegments
+      filters <- driverFilters(v, ast, fq, df, qOp) // None: over the cap
+    } yield (s, filters)
+    driverInput match {
+      case Some((s, (allow, deny))) =>
+        val byTerm = s.toSeq.groupBy(_.term)
+        val dfByTerm = byTerm.map { case (t, ss) =>
+          t -> ss.map(_.count.toLong).sum
+        }
+        val allowFn: Option[Long => Boolean] =
+          if (allow.isEmpty && deny.isEmpty) None
+          else Some(admits(allow, deny))
+        val top = Wand.topK(byTerm, dfByTerm, scoring, clauses,
+          n, avgdls, k, 0L, Long.MaxValue, allowFn, rq.boosts, after,
+          rq.groups, rq.tie)
+        return top.toSeq.toDS().toDF()
+      case None => // → distributed path
     }
 
-    // ---- distributed windowed WAND ----
-    // pure-filter fqs conjunct into the stored-field predicate (free);
-    // term fqs become allow sets alongside it
-    val (fqPreds, fqTermAsts) = fqSplit(fq, df, qOp)
-    val pred = (filterPredicate(ast).toSeq ++ fqPreds).reduceOption(_ && _)
-    // global per-term df: sum of segment counts over ALL the term's segments
-    // (tiny agg over the pruned scan; needed before windowing because a
-    // window only sees its overlapping segments)
-    val dfByTerm: Map[String, Long] = segs
-      .groupBy($"term").agg(sum($"count").as("df"))
-      .as[(String, Long)].collect().toMap
-    val bDf = spark.sparkContext.broadcast(dfByTerm)
-
-    val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
+    // ---- distributed windowed WAND: one Spark job ----
     // window length from the docId-SPACE extent, not the live-doc count:
     // after delete/compaction cycles maxDocId can exceed n, and sizing by n
     // would fragment the space into more windows than intended (r5 — the
     // high-water mark now rides in stats; -1 = pre-r5 stats, fall back to
     // n). Cap so window-local filter bitmaps stay ≤ 8 MiB regardless of
     // corpus size (also kills any 2^31-docId assumption).
+    val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
     val idSpace = math.max(n, v.stats.maxDocId + 1)
     val rangeLen = math.min(
       math.max(1L, (idSpace + parallelism - 1) / parallelism), 1L << 26)
+    val windows = ((idSpace + rangeLen - 1) / rangeLen).toInt
+
+    // allow set = stored-field predicate (pure-filter fqs conjunct into it)
+    // ∩ every term-fq match set, pre-intersected IN the plan (left-semi
+    // chain): fq intersection cannot be expressed post-union on one bitmap
+    val (fqPreds, fqTermAsts) = fqSplit(fq, df, qOp)
+    val pred = (filterPredicate(ast).toSeq ++ fqPreds).reduceOption(_ && _)
+    val allowIds: Option[DataFrame] =
+      (pred.map(p => v.docs.filter(p).select($"docId")).toSeq ++
+        fqTermAsts.map { case (_, fqAst) => fqMatchSet(v, fqAst) })
+        .reduceOption((a, b) => a.join(b, Seq("docId"), "left_semi"))
+    val hasAllow = allowIds.isDefined
 
     // hoisted so task closures do not capture the whole ResolvedQuery
     val boostsB = rq.boosts
     val groupsB = rq.groups
     val tieB = rq.tie
 
-    // per-window BLOCK slices, not whole segments: a segment spanning many
-    // windows ships each window only the bytes of its overlapping blocks
-    // (VERDICT r3 #1 — a cold term's full-span segment used to be copied
-    // span/rangeLen times through this shuffle). Single-window segments
-    // (hot df-split terms, the bulk) pass through untouched.
-    val segWin: Dataset[(Long, PostingSegment)] = segs
-      .flatMap { s =>
-        val first = s.firstDocId / rangeLen
-        val last = s.lastDocId / rangeLen
-        if (first == last) Iterator.single((first, s))
-        else (first to last).iterator.flatMap { r =>
-          PostingCodec.sliceForWindow(s, r * rangeLen, (r + 1) * rangeLen)
-            .map(slice => (r, slice))
-        }
-      }
-
-    // allow set = stored-field predicate ∩ every term-fq match set,
-    // pre-intersected IN the plan (left-semi chain) so the window cogroup
-    // still ships exactly one allow bitmap per window — fq intersection
-    // semantics can't be expressed post-union on a single bitmap
-    val allowSources: Seq[DataFrame] =
-      pred.map(p => v.docs.filter(p).select($"docId")).toSeq ++
-        fqTermAsts.map { case (_, fqAst) => fqMatchSet(v, fqAst) }
-    val hasPred = allowSources.nonEmpty
-    val filterRows: Option[Dataset[(Long, Long, Boolean)]] = {
-      val allowDs = allowSources
-        .reduceOption((a, b) => a.join(b, Seq("docId"), "left_semi"))
-        .map(_.as[Long].map(id => (id / rangeLen, id, false)))
-      val denyDs = tombstones(v).map(t =>
-        t.select($"docId").as[Long].map(id => (id / rangeLen, id, true)))
-      (allowDs, denyDs) match {
-        case (Some(a), Some(d)) => Some(a.union(d))
-        case (Some(a), None)    => Some(a)
-        case (None, Some(d))    => Some(d)
-        case (None, None)       => None
-      }
-    }
-
-    val perWindow: Dataset[Wand.Scored] = filterRows match {
-      case None =>
-        segWin.groupByKey(_._1).flatMapGroups { (rid, it) =>
-          val byTerm = it.map(_._2).toSeq.groupBy(_.term)
-          val lo = rid * rangeLen
-          Wand.topK(byTerm, bDf.value, scoring, clauses,
-            n, avgdls, k, lo, lo + rangeLen, None, boostsB,
-            after, groupsB, tieB).iterator
-        }
-      case Some(fr) =>
-        // cogroup: each window task gets its own filter slice as a
-        // window-local bitmap (offset by the window base) — the partition-
-        // aligned filter structure, built inside the plan
-        segWin.groupByKey(_._1).cogroup(fr.groupByKey(_._1)) {
-          (rid, segIt, fIt) =>
-            val segsHere = segIt.map(_._2).toSeq
-            if (segsHere.isEmpty) Iterator.empty
-            else {
-              val lo = rid * rangeLen
-              val hi = lo + rangeLen
-              var allowBs: java.util.BitSet = null
-              var denyBs: java.util.BitSet = null
-              fIt.foreach { case (_, id, isDeny) =>
-                val off = (id - lo).toInt
-                if (isDeny) {
-                  if (denyBs == null) denyBs = new java.util.BitSet()
-                  denyBs.set(off)
-                } else {
-                  if (allowBs == null) allowBs = new java.util.BitSet()
-                  allowBs.set(off)
-                }
-              }
-              val aBs = allowBs; val dBs = denyBs
-              val allowFn: Option[Long => Boolean] =
-                if (!hasPred && dBs == null) None
-                else Some { id =>
-                  val off = (id - lo).toInt
-                  (!hasPred || (aBs != null && aBs.get(off))) &&
-                  (dBs == null || !dBs.get(off))
-                }
-              val byTerm = segsHere.groupBy(_.term)
-              Wand.topK(byTerm, bDf.value, scoring, clauses,
-                n, avgdls, k, lo, hi, allowFn, boostsB, after,
-                groupsB, tieB).iterator
-            }
-        }
-    }
-
-    rankPage(perWindow.toDF(), None, k)
+    // one shuffle keyed by window: segments with their partial df, allow
+    // ids and tombstone ids, each input tagging its own rows
+    val idsByWindow = (ids: DataFrame, deny: Boolean) =>
+      ids.as[Long].rdd.mapPartitions(QueryEngine.idRows(_, rangeLen, deny))
+    val rows = spark.sparkContext.union(
+      segs.rdd.mapPartitions(QueryEngine.segmentRows(_, rangeLen, windows)) +:
+        (allowIds.map(idsByWindow(_, false)) ++
+          tombstones(v).map(idsByWindow(_, true))).toSeq)
+    val top = rows
+      // Int keys in [0, windows) hash to themselves: partition id = window id
+      .partitionBy(new org.apache.spark.HashPartitioner(windows))
+      .mapPartitions(QueryEngine.windowInputs(_, rangeLen, hasAllow)
+        .flatMap { w =>
+          Wand.topK(w.segs.groupBy(_.term), w.df, scoring, clauses, n,
+            avgdls, k, w.lo, w.lo + rangeLen, w.allow, boostsB, after,
+            groupsB, tieB)
+        })
+      .collect()
+    // windows are docId-disjoint, so their top-k lists merge exactly
+    top.sortWith((a, b) => a.score > b.score ||
+        (a.score == b.score && a.docId < b.docId))
+      .take(k).toSeq.toDS().toDF()
   }
 
   // ---------------------------------------------------------- exhaustive
@@ -1729,6 +1674,101 @@ object QueryEngine {
     * distributed windowed plan. 4M ids = 32 MB.
     */
   val MaxDriverFilterDocs: Int = 1 << 22
+
+  /** One row of the distributed top-k shuffle, keyed by docId window. */
+  private sealed trait WindowRow
+  private final case class SegmentRow(seg: PostingSegment) extends WindowRow
+  /** One map partition's term → Σ count over whole segments. */
+  private final case class DfRow(df: Map[String, Long]) extends WindowRow
+  /** One map partition's allow (or tombstone, `deny`) docIds in a window. */
+  private final case class IdsRow(ids: Array[Long], deny: Boolean)
+      extends WindowRow
+
+  /** What one window's WAND runs over: its docId range start, its segment
+    * slices, the global df and the window's allow/deny test (None = all).
+    */
+  private final case class WindowInput(lo: Long, segs: Seq[PostingSegment],
+      df: Map[String, Long], allow: Option[Long => Boolean])
+
+  /** Map side, posting segments: each segment keyed by its window; one that
+    * spans several windows is cut into per-window block slices, so a window
+    * receives only the bytes of its overlapping blocks. At the end of the
+    * partition every window gets the partition's df, summed over WHOLE
+    * segments (a slice's count covers only the slice), so the df rows a
+    * window receives add up to the exact global df.
+    */
+  private def segmentRows(segs: Iterator[PostingSegment], rangeLen: Long,
+      windows: Int): Iterator[(Int, WindowRow)] = {
+    val df = mutable.HashMap.empty[String, Long]
+    segs.flatMap { s =>
+      df(s.term) = df.getOrElse(s.term, 0L) + s.count
+      val first = s.firstDocId / rangeLen
+      val last = s.lastDocId / rangeLen
+      if (first == last) Iterator.single((first.toInt, SegmentRow(s)))
+      else (first to last).iterator.flatMap { w =>
+        PostingCodec.sliceForWindow(s, w * rangeLen, (w + 1) * rangeLen)
+          .map(slice => (w.toInt, SegmentRow(slice)))
+      }
+    } ++ { // by-name: runs once the segments are exhausted
+      if (df.isEmpty) Iterator.empty
+      else {
+        val row = DfRow(df.toMap)
+        Iterator.tabulate(windows)(w => (w, row))
+      }
+    }
+  }
+
+  /** Map side, filter docIds: one row per window the partition's ids fall
+    * in, holding those ids.
+    */
+  private def idRows(ids: Iterator[Long], rangeLen: Long,
+      deny: Boolean): Iterator[(Int, WindowRow)] = {
+    val byWindow = mutable.HashMap.empty[Int, mutable.ArrayBuilder.ofLong]
+    ids.foreach { id =>
+      byWindow.getOrElseUpdate((id / rangeLen).toInt,
+        new mutable.ArrayBuilder.ofLong) += id
+    }
+    byWindow.iterator.map { case (w, b) => (w, IdsRow(b.result(), deny)) }
+  }
+
+  /** Reduce side: one partition's rows → the input of each window holding
+    * segments, with window-local allow/deny bitmaps (null = absent). A
+    * window with an allow set but no allow ids in range has no input.
+    * Rows group by their window key: a docId past the stats' high-water
+    * mark (pre-r5 stats) hashes onto a lower partition. Each partition gets
+    * one df row per map partition, so all of them sum to the global df.
+    */
+  private def windowInputs(rows: Iterator[(Int, WindowRow)], rangeLen: Long,
+      hasAllow: Boolean): Iterator[WindowInput] = {
+    val segs = mutable.HashMap.empty[Int, mutable.ArrayBuffer[PostingSegment]]
+    val allow = mutable.HashMap.empty[Int, java.util.BitSet]
+    val deny = mutable.HashMap.empty[Int, java.util.BitSet]
+    val df = mutable.HashMap.empty[String, Long]
+    rows.foreach {
+      case (w, SegmentRow(s)) =>
+        segs.getOrElseUpdate(w, mutable.ArrayBuffer.empty) += s
+      case (_, DfRow(m)) =>
+        m.foreach { case (t, c) => df(t) = df.getOrElse(t, 0L) + c }
+      case (w, IdsRow(ids, isDeny)) =>
+        val bs = (if (isDeny) deny else allow)
+          .getOrElseUpdate(w, new java.util.BitSet())
+        val lo = w * rangeLen
+        ids.foreach(id => bs.set((id - lo).toInt))
+    }
+    val dfByTerm = df.toMap
+    segs.iterator.collect { case (w, ss) if !hasAllow || allow.contains(w) =>
+      val lo = w * rangeLen
+      val a = allow.getOrElse(w, null)
+      val d = deny.getOrElse(w, null)
+      val test: Option[Long => Boolean] =
+        if (a == null && d == null) None
+        else Some { id =>
+          val off = (id - lo).toInt
+          (a == null || a.get(off)) && (d == null || !d.get(off))
+        }
+      WindowInput(lo, ss.toSeq, dfByTerm, test)
+    }
+  }
 
   /** Stored docs-table columns `searchSorted` may order by (Solr sort=). */
   val SortableFields: Set[String] =

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConf}
 import graft.oracle.{OracleDoc, SeqOracle}
-import graft.query.{QueryEngine, QueryParser}
+import graft.query.{QueryEngine, QueryParser, Wand}
 
 /** Solr fq / q.op / facet.query surface (round 5):
   *  - fq match sets constrain results through ALL THREE physical paths
@@ -268,6 +268,24 @@ class FqSpec extends AnyFunSuite {
       "facet fq+qop")
   }
 
+  /** Run `f` and count the Spark jobs it launched. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.TestListenerBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("cache hits launch no Spark job: after one warm call, a repeat of " +
       "each cached shape runs 0 jobs") {
     // the index has no tombstones: their ids are re-read on every query
@@ -279,23 +297,67 @@ class FqSpec extends AnyFunSuite {
       ("*:*", Seq("w00017 OR w00342")), // match-all: term-fq ids
       ("w0099*", Nil))               // prefix expansion
     val eng = new QueryEngine(spark, indexDir, conf.numBuckets)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try shapes.foreach { case (q, fq) =>
+    shapes.foreach { case (q, fq) =>
       val warm = rows(eng.search(q, 10, fq = fq))
-      org.apache.spark.TestListenerBus.drain(sc)
-      jobs.set(0)
-      val repeat = rows(eng.search(q, 10, fq = fq))
-      org.apache.spark.TestListenerBus.drain(sc)
-      assert(jobs.get == 0, s"repeat of q=$q fq=$fq ran ${jobs.get} jobs")
+      val (repeat, n) = jobsOf(rows(eng.search(q, 10, fq = fq)))
+      assert(n == 0, s"repeat of q=$q fq=$fq ran $n jobs")
       assert(repeat == warm, s"q=$q fq=$fq: repeat differs from warm call")
-    } finally sc.removeSparkListener(listener)
+    }
+  }
+
+  test("distributed top-k: one Spark job per query, ranked like the " +
+      "driver and exhaustive paths with bit-identical scores") {
+    def sameRows(got: Seq[(Long, Double)], expect: Seq[(Long, Double)],
+        ctx: String): Unit =
+      assert(got == expect, s"[$ctx]\n got=$got\n exp=$expect")
+    def checkOneJob(dist: QueryEngine, q: String): Unit = {
+      rows(dist.search(q, 10)) // warm
+      val (_, n) = jobsOf(rows(dist.search(q, 10)))
+      assert(n == 1, s"distributed q=$q ran $n jobs")
+    }
+    Seq("the", "w00017 the", "the AND of", "lang:no AND w00017")
+      .foreach(checkOneJob(distEngine, _))
+
+    // w00017's few postings share one segment spanning several windows, so
+    // the distributed path slices it and needs the pre-slice df
+    val p = spark.sparkContext.defaultParallelism
+    val rangeLen = (NDocs + p - 1) / p
+    val spans = engine.postingsFor(Seq("w00017")).collect()
+      .exists(s => s.firstDocId / rangeLen != s.lastDocId / rangeLen)
+    assert(spans, "w00017 has no segment spanning two windows")
+
+    val page1 = rows(engine.search("the", 10))
+    val after = Some(Wand.Scored(page1.last._1, page1.last._2))
+    val qf = Seq("text" -> 1.0, "title" -> 3.0)
+    val cases: Seq[(String, Option[Wand.Scored], Seq[String],
+        Seq[(String, Double)], Double)] = Seq("the", "w00017", "w00017 the", "the AND of",
+      "lang:no AND w00017").map((_, None, Nil, Nil, 0.0)) ++ Seq(
+      // (q, after, fq, qf, tie)
+      ("the", after, Nil, Nil, 0.0),          // second page
+      ("w00017 9999", None, Nil, qf, 0.3),    // edismax qf + tie
+      ("w00017 w00342", None, Seq("the"), Nil, 0.0)) // term fq
+    cases.foreach { case (q, af, fq, qfs, tie) =>
+      val ctx = s"q=$q after=$af fq=$fq qf=$qfs tie=$tie"
+      val got = rows(distEngine.search(q, 10, "text", af, fq, "OR", qfs, tie))
+      assert(got.nonEmpty, s"[$ctx] empty")
+      sameRows(got, rows(engine.search(q, 10, "text", af, fq, "OR", qfs,
+        tie)), s"$ctx: distributed vs driver")
+      sameRows(got, rows(engine.searchExhaustive(q, 10, "text", af, fq, "OR",
+        qfs, tie)), s"$ctx: distributed vs exhaustive")
+    }
+
+    // tombstones travel in the same shuffle: still one job, same ranking
+    val dir = SparkTestSession.tempDir("graft-fq-dist-del")
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 200), dir,
+      IndexConf(numBuckets = 4, segmentMaxDocs = 32))
+    val drv = new QueryEngine(spark, dir, 4)
+    assert(drv.deleteByQuery("the", 3) == 3)
+    val dist = new QueryEngine(spark, dir, 4, driverWandMaxSegments = 0)
+    checkOneJob(dist, "the")
+    val got = rows(dist.search("the", 10))
+    sameRows(got, rows(drv.search("the", 10)), "tombstones: vs driver")
+    sameRows(got, rows(drv.searchExhaustive("the", 10)),
+      "tombstones: vs exhaustive")
   }
 
   test("fq docId cache retires with the view: append + invalidate shows " +

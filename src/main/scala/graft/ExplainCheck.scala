@@ -81,20 +81,18 @@ object ExplainCheck {
         .foreach(l => println("[plan] " + l.trim.take(1200)))
       // docsmap pruning audit: the /get plans over only the files whose url
       // range can contain the key, per generation
-      val fs = new org.apache.hadoop.fs.Path(args(0))
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       graft.index.IndexLayout.current(spark, args(0)).getOrElse(Seq.empty)
         .foreach { sd =>
-          val mp = s"${args(0)}/$sd/docsmap"
           // pre-docsmap generations fall back to a full-dir scan in
           // realtimeGet — report that instead of crashing the audit
-          if (fs.exists(new org.apache.hadoop.fs.Path(mp))) {
-            val m = spark.read.parquet(mp)
-            val hit = m.filter(col("urlMin") <= lit(u) &&
-              col("urlMax") >= lit(u)).count()
-            println(s"[plan] docsmap $sd: candidate files $hit of ${m.count()}")
-          } else
-            println(s"[plan] docsmap $sd: absent (full-dir fallback)")
+          graft.index.IndexLayout.readDocsMap(spark, s"${args(0)}/$sd") match {
+            case Some(m) =>
+              val hit = m.filter(col("urlMin") <= lit(u) &&
+                col("urlMax") >= lit(u)).count()
+              println(s"[plan] docsmap $sd: candidate files $hit of ${m.count()}")
+            case None =>
+              println(s"[plan] docsmap $sd: absent (full-dir fallback)")
+          }
         }
     }
     spark.stop()

@@ -144,9 +144,7 @@ object IndexBuilder {
     val nDocs = perPid.map(_.getLong(1)).sum
     val totalTerms = perPid.map(_.getLong(2)).sum
     val titleTerms = perPid.map(_.getLong(3)).sum
-    val stats = CorpusStats(nDocs,
-      if (nDocs == 0) 0.0 else totalTerms.toDouble / nDocs, totalTerms,
-      if (nDocs == 0) 0.0 else titleTerms.toDouble / nDocs, titleTerms,
+    val stats = CorpusStats.of(nDocs, totalTerms, titleTerms,
       maxDocId = idOffset + nDocs - 1) // dense assignment: known in O(1)
     val offsets = new Array[Long](p + 1)
     offsets(0) = idOffset
@@ -235,9 +233,8 @@ object IndexBuilder {
     */
   private def postBuildCleanup(spark: SparkSession, indexDir: String,
       gcGraceMs: Long): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/tombstones"), true)
+    IndexLayout.fsOf(spark, indexDir).delete(
+      new org.apache.hadoop.fs.Path(IndexLayout.tombstonesDir(indexDir)), true)
     IndexLayout.gcUnreferenced(spark, indexDir, gcGraceMs)
   }
 
@@ -264,7 +261,7 @@ object IndexBuilder {
     val statsMax = IndexLayout.combinedStats(spark, indexDir).maxDocId
     val liveMax =
       if (statsMax >= 0) statsMax
-      else spark.read.parquet(published.map(sd => s"$indexDir/$sd/docs"): _*)
+      else IndexLayout.readDocs(spark, indexDir, published)
         .agg(max($"docId")).head().getLong(0)
     // backstop: never reissue an id the tombstone view can mask. A partial
     // compaction whose merged subset was ENTIRELY dead drops those
@@ -273,14 +270,9 @@ object IndexBuilder {
     // tombstoned id, and reusing it would hide the new doc silently. The
     // tombstone tables are docId-only and batch-sized; this is an O(deletes)
     // metadata read, not a corpus scan.
-    val tombPaths = IndexLayout.tombstonePaths(spark, indexDir, published)
-    val tombMax =
-      if (tombPaths.isEmpty) -1L
-      else {
-        val r = spark.read.schema("docId LONG").parquet(tombPaths: _*)
-          .agg(max($"docId")).head()
-        if (r.isNullAt(0)) -1L else r.getLong(0)
-      }
+    val tombMax = IndexLayout.readTombstones(spark, indexDir, published)
+      .map(_.agg(max($"docId")).head())
+      .filterNot(_.isNullAt(0)).fold(-1L)(_.getLong(0))
     val offset = math.max(liveMax, tombMax) + 1L
     val seg = IndexLayout.nextSegDir(spark, indexDir)
     IndexLayout.writeJobDescriptor(spark, s"$indexDir/$seg",
@@ -351,12 +343,12 @@ object IndexBuilder {
   private def writeSupersedes(spark: SparkSession, indexDir: String,
       prevSegs: Seq[String], seg: String): Unit = {
     import spark.implicits._
-    val prevDocs = spark.read.parquet(
-      prevSegs.map(sd => s"$indexDir/$sd/docs"): _*)
-    val newUrls = spark.read.parquet(s"$indexDir/$seg/docs").select($"url")
+    val prevDocs = IndexLayout.readDocs(spark, indexDir, prevSegs)
+    val newUrls = IndexLayout.readDocs(spark, indexDir, Seq(seg)).select($"url")
     prevDocs.join(newUrls, Seq("url"), "left_semi")
       .select($"docId")
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$seg/supersedes")
+      .write.mode(SaveMode.Overwrite)
+      .parquet(IndexLayout.supersedesDir(s"$indexDir/$seg"))
   }
 
   /** Resume a partially-completed job: target the newest segment dir on
@@ -374,13 +366,14 @@ object IndexBuilder {
   def resume(spark: SparkSession, docs: Dataset[WebDoc], indexDir: String,
       conf: IndexConf = IndexConf()): BuildReport = {
     import spark.implicits._
+    def nothingBuilt(buckets: Int) = BuildReport(0, 0, 0, 0, buckets, 0)
     IndexLayout.latestSegDir(spark, indexDir) match {
       case None => build(spark, docs, indexDir, conf) // nothing on disk yet
       case Some(sd) =>
         val segPath = s"$indexDir/$sd"
         val published = IndexLayout.current(spark, indexDir).getOrElse(Nil)
-        val fs = new org.apache.hadoop.fs.Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        def drop(path: String): Unit = IndexLayout.fsOf(spark, path)
+          .delete(new org.apache.hadoop.fs.Path(path), true)
         val desc = IndexLayout.readJobDescriptor(spark, segPath) match {
           case Some(d) => d
           case None =>
@@ -392,15 +385,13 @@ object IndexBuilder {
             // itself replace a whole published index with just the batch
             // docs). Only an index with no published generation at all may
             // fall through to a fresh build.
-            if (published.contains(sd))
-              return BuildReport(0, 0, 0, 0, conf.numBuckets, 0)
-            fs.delete(new org.apache.hadoop.fs.Path(segPath), true)
-            if (published.nonEmpty)
-              return BuildReport(0, 0, 0, 0, conf.numBuckets, 0)
+            if (published.contains(sd)) return nothingBuilt(conf.numBuckets)
+            drop(segPath)
+            if (published.nonEmpty) return nothingBuilt(conf.numBuckets)
             return build(spark, docs, indexDir, conf)
         }
         val done: Set[Int] =
-          try spark.read.parquet(s"$segPath/manifest")
+          try spark.read.parquet(IndexLayout.manifestDir(segPath))
             .filter($"status" === "complete")
             .select($"partitionId").as[Int].collect().toSet
           catch { case _: Exception => Set.empty }
@@ -437,7 +428,7 @@ object IndexBuilder {
               if (desc.kind == "compaction")
                 IndexLayout.condemnFoldedTombstones(spark, indexDir, sd)
               IndexLayout.gcUnreferenced(spark, indexDir, rconf.gcGraceMs)
-              return BuildReport(0, 0, 0, 0, rconf.numBuckets, 0)
+              return nothingBuilt(rconf.numBuckets)
             }
             if (missing.isEmpty) {
               // fully materialized, crash was before the flip: finish it.
@@ -452,9 +443,9 @@ object IndexBuilder {
             } else {
               // half-written merge: its inputs are still fully published —
               // discard the orphan; the next Compaction run redoes it
-              fs.delete(new org.apache.hadoop.fs.Path(segPath), true)
+              drop(segPath)
             }
-            BuildReport(0, 0, 0, 0, rconf.numBuckets, 0)
+            nothingBuilt(rconf.numBuckets)
 
           case kind => // "build" | "append"
             if (missing.isEmpty && published == desc.publish) {
@@ -464,15 +455,12 @@ object IndexBuilder {
               // permanently masked arbitrary new docs (and the next full
               // compaction would physically drop them)
               if (kind == "build") postBuildCleanup(spark, indexDir, rconf.gcGraceMs)
-              return BuildReport(0, 0, 0, 0, rconf.numBuckets, 0)
+              return nothingBuilt(rconf.numBuckets)
             }
             val report =
-              if (missing.isEmpty) BuildReport(0, 0, 0, 0, rconf.numBuckets, 0)
+              if (missing.isEmpty) nothingBuilt(rconf.numBuckets)
               else {
-                missing.foreach { b =>
-                  fs.delete(new org.apache.hadoop.fs.Path(
-                    s"$segPath/postings/termBucket=$b"), true)
-                }
+                missing.foreach(b => drop(IndexLayout.bucketDir(segPath, b)))
                 buildInternal(spark, docs, segPath, rconf, Some(missing),
                   desc.idOffset)
               }
@@ -527,26 +515,23 @@ object IndexBuilder {
       nDocs: Long, conf: IndexConf): Map[String, Long] = {
     val spark = sampledTfRows.sparkSession
     import spark.implicits._
-    val segMax = conf.segmentMaxDocs
     sampledTfRows
       .groupBy($"term").agg(count(lit(1)).as("c"))
-      .filter($"c" * sampleMod > segMax)
+      .filter($"c" * sampleMod > conf.segmentMaxDocs)
       .select($"term", $"c")
       .as[(String, Long)].collect()
-      .map { case (t, c) =>
-        val estDf = c * sampleMod
-        val nSeg = (estDf + segMax - 1) / segMax
-        t -> math.max(1L, (nDocs + nSeg - 1) / nSeg) // segLen
-      }.toMap
+      .map { case (t, c) => t -> segLen(c * sampleMod, nDocs, conf) }.toMap
   }
 
-  /** Shared build tail: (term, docId, tf, doclen, positions) rows →
-    * segmented, encoded postings written to outDir/postings. Used by the
-    * builder and by Compaction. Note for append: segment ids restart at 0
-    * per batch, but segments of the same term from different batches are
-    * docId-disjoint (new ids start past the high-water mark), which is the
-    * only property the query-side TermCursor needs.
+  /** Docs per segment for a hot term of document frequency `df` (sampled
+    * in a build, exact in a compaction): ⌈df / segmentMaxDocs⌉ equal
+    * docId ranges over the generation's `nDocs` ids.
     */
+  private[index] def segLen(df: Long, nDocs: Long, conf: IndexConf): Long = {
+    val nSeg = (df + conf.segmentMaxDocs - 1) / conf.segmentMaxDocs
+    math.max(1L, (nDocs + nSeg - 1) / nSeg)
+  }
+
   /** Target tf rows per encode task (~150 MB working set): the encode
     * shuffle's partition count scales with DATA VOLUME, not just cores —
     * sizing it by core count alone put gigabytes into each in-task sort at
@@ -556,12 +541,20 @@ object IndexBuilder {
     * they fit executor memory at the target SF" rule: per-task working set
     * must fit (heap / concurrent tasks) with headroom.
     */
-  private val EncodeRowsPerTask =
-    sys.props.get("graft.encodeRowsPerTask").map(_.toLong).getOrElse(1200000L)
+  private val EncodeRowsPerTask = 1200000L
 
+  /** Shared build tail: (term, docId, tf, doclen, positions) rows →
+    * segmented, encoded postings written to the segment's postings dir.
+    * Used by the builder and by Compaction. `onlyBuckets` (resume) encodes
+    * just those buckets and adds them beside the completed ones. Note for
+    * append: segment ids restart at 0 per batch, but segments of the same
+    * term from different batches are docId-disjoint (new ids start past
+    * the high-water mark), which is the only property the query-side
+    * TermCursor needs.
+    */
   private[index] def encodePostings(spark: SparkSession, tfRows: DataFrame,
       hot: Map[String, Long], totalTokens: Long, conf: IndexConf,
-      outDir: String, append: Boolean, onlyBuckets: Option[Set[Int]]): Unit = {
+      outDir: String, onlyBuckets: Option[Set[Int]]): Unit = {
     import spark.implicits._
     val nb = conf.numBuckets
     // segment = docId / segLen for hot terms, 0 otherwise — a broadcast hash
@@ -596,66 +589,90 @@ object IndexBuilder {
     segRows.toDF()
       .repartition(nb, $"termBucket")
       .sortWithinPartitions($"term", $"segment")
-      .write.mode(if (append) SaveMode.Append else SaveMode.Overwrite)
-      .partitionBy("termBucket").parquet(s"$outDir/postings")
+      .write.mode(if (onlyBuckets.isDefined) SaveMode.Append
+        else SaveMode.Overwrite)
+      .partitionBy("termBucket").parquet(IndexLayout.postingsDir(outDir))
   }
 
-  /** Per-bucket manifest statistics of a written postings dir. Row counts
-    * and term ranges come from a COLUMN-PRUNED scan (term + count only —
-    * never the binary posting columns), compressed byte sizes from the
-    * filesystem's per-directory content summaries; re-reading the full
-    * binary columns just to sum their lengths measured as a multi-second
-    * serial tail on every build.
-    */
-  private[index] def manifestStats(spark: SparkSession,
-      outDir: String): DataFrame = {
-    import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bucketBytes: Map[Int, Long] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$outDir/postings")).toSeq
-        .filter(_.getPath.getName.startsWith("termBucket="))
-        .map { st =>
-          st.getPath.getName.stripPrefix("termBucket=").toInt ->
-            fs.getContentSummary(st.getPath).getLength
-        }.toMap
-    // map-literal lookup stays in codegen (the one UDF left on the build
-    // path, VERDICT r3 #4); ~32 entries, folded into the plan as a literal
-    val bytesMap = typedLit(bucketBytes)
-    spark.read.parquet(s"$outDir/postings")
-      .select($"termBucket", $"term", $"count")
-      .groupBy($"termBucket")
-      .agg(min($"term").as("termRangeLo"), max($"term").as("termRangeHi"),
-        count(lit(1)).as("segCount"), countDistinct($"term").as("termCount"),
-        sum($"count").as("rowCount"))
-      .select($"termBucket".cast("int").as("partitionId"),
-        $"termRangeLo", $"termRangeHi", $"segCount", $"termCount", $"rowCount")
-      .withColumn("bytes",
-        coalesce(element_at(bytesMap, $"partitionId"), lit(0L)))
-  }
-
-  /** Per-file url min/max of a segment's just-written docs table →
-    * `$segPath/docsmap` (one tiny file). [[graft.query.QueryEngine.realtimeGet]]
-    * consults it to plan a point lookup over O(files containing url) instead
-    * of scheduling a footer-check task per docs file — at 10^12 docs that is
-    * the difference between one task and 10^5+ per /get. The docs files are
-    * url-sorted within range partitions (build) or near-sorted (compaction
-    * preserves source-file runs), so ranges are tight; the map is EXACT
-    * either way because it is computed from the actual file contents — a
+  /** A segment's side tables: docs (stored fields plus the per-field token
+    * counts compaction re-derives stats from), the one-row stats, then the
+    * docsmap. Build runs this beside its encode, compaction after it.
+    *
+    * The docsmap is the per-file url min/max of the docs just written (one
+    * tiny file). [[graft.query.QueryEngine.realtimeGet]] consults it to plan
+    * a point lookup over O(files containing url) instead of scheduling a
+    * footer-check task per docs file — at 10^12 docs that is the difference
+    * between one task and 10^5+ per /get. The docs files are url-sorted
+    * within range partitions (build) or near-sorted (compaction preserves
+    * source-file runs), so ranges are tight; the map is EXACT either way
+    * because it is computed from the actual file contents — a
     * one-narrow-column (url) distributed pass over files still hot in the
     * page cache. Readers treat a missing docsmap as "scan every file", so
     * pre-docsmap segments keep serving.
     */
-  private[graft] def writeDocsMap(spark: SparkSession, segPath: String): Unit = {
+  private[index] def writeSideTables(spark: SparkSession, segPath: String,
+      docs: DataFrame, stats: CorpusStats): Unit = {
     import spark.implicits._
-    spark.read.parquet(s"$segPath/docs")
+    val docsDir = IndexLayout.docsDir(segPath)
+    docs.write.mode(SaveMode.Overwrite).parquet(docsDir)
+    Seq(stats).toDS()
+      .write.mode(SaveMode.Overwrite).parquet(IndexLayout.statsDir(segPath))
+    spark.read.parquet(docsDir)
       .select(input_file_name().as("f"), $"url")
       .groupBy($"f")
       .agg(min($"url").as("urlMin"), max($"url").as("urlMax"))
       .select(regexp_extract($"f", "[^/]+$", 0).as("file"),
         $"urlMin", $"urlMax")
       .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$segPath/docsmap")
+      .write.mode(SaveMode.Overwrite).parquet(IndexLayout.docsMapDir(segPath))
+  }
+
+  /** Write a segment's manifest: per-bucket statistics of its postings.
+    * The manifest is the commit barrier resume checks, so every caller
+    * writes it LAST. With `onlyBuckets` (resume) only those buckets get
+    * fresh rows and the existing manifest's other rows are kept. Returns
+    * the rows written.
+    *
+    * Row counts and term ranges come from a COLUMN-PRUNED scan (term +
+    * count only — never the binary posting columns), compressed byte sizes
+    * from the filesystem's per-directory content summaries; re-reading the
+    * full binary columns just to sum their lengths measured as a
+    * multi-second serial tail on every build.
+    */
+  private[index] def writeManifest(spark: SparkSession, segPath: String,
+      inputFiles: Seq[String], durationMs: Long,
+      onlyBuckets: Option[Set[Int]]): Array[ManifestRow] = {
+    import spark.implicits._
+    val fs = IndexLayout.fsOf(spark, segPath)
+    val bucketBytes: Map[Int, Long] = IndexLayout.bucketDirs(spark, segPath)
+      .map { case (b, d) => b -> fs.getContentSummary(d).getLength }.toMap
+    // map-literal lookup stays in codegen (the one UDF left on the build
+    // path, VERDICT r3 #4); ~32 entries, folded into the plan as a literal
+    val all = spark.read.parquet(IndexLayout.postingsDir(segPath))
+      .select($"termBucket", $"term", $"count")
+      .groupBy($"termBucket")
+      .agg(min($"term").as("termRangeLo"), max($"term").as("termRangeHi"),
+        count(lit(1)).as("segCount"), countDistinct($"term").as("termCount"),
+        sum($"count").as("rowCount"))
+      .select($"termBucket".cast("int").as("partitionId"),
+        $"termRangeLo", $"termRangeHi", $"segCount", $"termCount", $"rowCount",
+        coalesce(element_at(typedLit(bucketBytes), $"termBucket".cast("int")),
+          lit(0L)).as("bytes"),
+        typedLit(inputFiles).as("inputFiles"),
+        lit(durationMs).as("durationMs"), lit("complete").as("status"))
+    val fresh = onlyBuckets
+      .fold(all)(bs => all.filter($"partitionId".isin(bs.toSeq: _*)))
+      .as[ManifestRow].collect()
+    val rows = onlyBuckets.fold(fresh) { bs =>
+      val kept =
+        try spark.read.parquet(IndexLayout.manifestDir(segPath))
+          .as[ManifestRow].collect().filterNot(m => bs(m.partitionId))
+        catch { case _: Exception => Array.empty[ManifestRow] }
+      fresh ++ kept
+    }
+    rows.toSeq.toDS().coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(IndexLayout.manifestDir(segPath))
+    rows
   }
 
   private def buildInternal(spark: SparkSession, docs: Dataset[WebDoc],
@@ -665,15 +682,11 @@ object IndexBuilder {
     val t0 = System.nanoTime()
     def phase(name: String): Unit =
       println(f"[graft-build] +${(System.nanoTime() - t0) / 1e9}%.1fs $name")
-    val nb = conf.numBuckets
-    val append = onlyBuckets.isDefined
     val inputFiles = docs.inputFiles
 
     val (idDocs, unpersistSorted, stats) =
       assignDocIds(spark, docs, conf.buildPartitions, idOffset)
     val nDocs = stats.n
-    val avgdl = stats.avgdl
-    val totalTerms = stats.totalTerms
     phase(s"docIds assigned (n=$nDocs)")
 
     // docs table + stats write concurrently with the postings pipeline
@@ -681,12 +694,9 @@ object IndexBuilder {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val sideWrites = Future {
-      idDocs.toDF()
-        .select($"docId", $"url", $"warc_ts", $"lang", $"doclen", $"titleLen")
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
-      Seq(stats).toDS()
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/stats")
-      writeDocsMap(spark, outDir)
+      writeSideTables(spark, outDir, idDocs.toDF()
+        .select($"docId", $"url", $"warc_ts", $"lang", $"doclen", $"titleLen"),
+        stats)
     }
 
     val hot = hotTerms(idDocs, nDocs, conf)
@@ -697,42 +707,25 @@ object IndexBuilder {
     // once by the encode shuffle
     val tfs = tfRowsOf(idDocs).toDF()
 
-    encodePostings(spark, tfs, hot, totalTerms, conf, outDir, append,
+    encodePostings(spark, tfs, hot, stats.totalTerms, conf, outDir,
       onlyBuckets)
     phase("postings written")
     Await.result(sideWrites, Duration.Inf)
     phase("docs+stats written")
 
-    // manifest LAST = the commit barrier
     val durationMs = (System.nanoTime() - t0) / 1000000L
-    var manifestNew = manifestStats(spark, outDir)
-      .select($"partitionId", $"termRangeLo", $"termRangeHi", $"segCount",
-        $"termCount", $"rowCount", $"bytes",
-        typedLit(inputFiles.toSeq).as("inputFiles"),
-        lit(durationMs).as("durationMs"), lit("complete").as("status"))
-    onlyBuckets.foreach { bs =>
-      manifestNew = manifestNew.filter($"partitionId".isin(bs.toSeq: _*))
-    }
-    val manifestRows: Array[ManifestRow] =
-      (if (append)
-        try manifestNew.as[ManifestRow].collect() ++
-          spark.read.parquet(s"$outDir/manifest").as[ManifestRow].collect()
-            .filterNot(m => onlyBuckets.get.contains(m.partitionId))
-        catch { case _: Exception => manifestNew.as[ManifestRow].collect() }
-      else manifestNew.as[ManifestRow].collect())
-    manifestRows.toSeq.toDS().coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/manifest")
+    val manifestRows = writeManifest(spark, outDir, inputFiles.toSeq,
+      durationMs, onlyBuckets)
     phase("manifest written")
 
-    val segCount = manifestRows.map(_.segCount).sum
+    unpersistSorted()
     // exact distinct-term count for this generation: buckets partition the
     // term space, so the per-bucket distinct counts sum without overlap
     // (the pre-r5 report put segCount here, overstating terms whenever a
     // hot term was df-split into multiple segments)
-    val termCount = manifestRows.map(_.termCount).sum
-    val postingsCount = manifestRows.map(_.rowCount).sum
-    unpersistSorted()
-    BuildReport(nDocs, termCount, postingsCount, segCount, nb, durationMs)
+    BuildReport(nDocs, manifestRows.map(_.termCount).sum,
+      manifestRows.map(_.rowCount).sum, manifestRows.map(_.segCount).sum,
+      conf.numBuckets, durationMs)
   }
 }
 

@@ -1,7 +1,7 @@
 package graft.index
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Generation layout of an index directory — the atomic-publish machinery
   * (the reference's visibility barrier is `solrc.commit`,
@@ -28,8 +28,30 @@ object IndexLayout {
 
   def segDirName(k: Int): String = f"seg-$k%06d"
 
-  private def fsOf(spark: SparkSession, indexDir: String): FileSystem =
-    new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[index] def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  // ------------------------------------------------------ file names
+  //
+  // The only place that spells the names inside an index dir. `seg` is a
+  // segment dir PATH (`$indexDir/seg-NNNNNN`).
+
+  private val BucketPrefix = "termBucket="
+
+  def postingsDir(seg: String): String = s"$seg/postings"
+  /** One term-hash bucket's partition dir under [[postingsDir]]. */
+  def bucketDir(seg: String, b: Int): String =
+    s"${postingsDir(seg)}/$BucketPrefix$b"
+  def docsDir(seg: String): String = s"$seg/docs"
+  def docsMapDir(seg: String): String = s"$seg/docsmap"
+  def statsDir(seg: String): String = s"$seg/stats"
+  def manifestDir(seg: String): String = s"$seg/manifest"
+  def supersedesDir(seg: String): String = s"$seg/supersedes"
+  private def jobFile(seg: String): String = s"$seg/job.txt"
+  private def foldedTombstonesFile(seg: String): String =
+    s"$seg/folded-tombstones.txt"
+  /** The global delete-by-id dir, beside the segment dirs. */
+  def tombstonesDir(indexDir: String): String = s"$indexDir/tombstones"
 
   private val PointerRe = "current-(\\d{6})\\.txt".r
   private val SegRe = "seg-(\\d{6})".r
@@ -227,7 +249,7 @@ object IndexLayout {
       now: Long, graceMs: Long): Boolean = {
     if (graceMs <= 0) return true
     val hasManifest =
-      try fs.exists(new Path(st.getPath, "manifest"))
+      try fs.exists(new Path(manifestDir(st.getPath.toString)))
       catch { case _: Exception => false }
     if (hasManifest) return true
     def maxMtime(p: Path, depth: Int): Long = {
@@ -257,9 +279,9 @@ object IndexLayout {
   def condemnFoldedTombstones(spark: SparkSession, indexDir: String,
       seg: String): Unit = {
     val fs = fsOf(spark, indexDir)
-    val folded = new Path(s"$indexDir/$seg/folded-tombstones.txt")
+    val folded = new Path(foldedTombstonesFile(s"$indexDir/$seg"))
     if (!fs.exists(folded)) return // merge saw no global tombstones
-    val marker = new Path(s"$indexDir/tombstones/.condemned-$seg")
+    val marker = new Path(tombstonesDir(indexDir), s".condemned-$seg")
     if (fs.exists(marker)) return
     val names = readLines(fs, folded)
     if (names.isEmpty) return
@@ -274,7 +296,7 @@ object IndexLayout {
 
   private def reapCondemnedTombstones(fs: FileSystem, indexDir: String,
       now: Long, graceMs: Long): Unit = {
-    val tomb = new Path(s"$indexDir/tombstones")
+    val tomb = new Path(tombstonesDir(indexDir))
     if (!fs.exists(tomb)) return
     fs.listStatus(tomb)
       .filter(_.getPath.getName.startsWith(".condemned-"))
@@ -295,7 +317,7 @@ object IndexLayout {
             // empty tombstones/ dir on EVERY later resume — a churn loop,
             // not a data bug. With the snapshot gone the replay is a no-op.
             val seg = m.getPath.getName.stripPrefix(".condemned-")
-            try fs.delete(new Path(s"$indexDir/$seg/folded-tombstones.txt"),
+            try fs.delete(new Path(foldedTombstonesFile(s"$indexDir/$seg")),
               false)
             catch { case _: Exception => }
             fs.delete(m.getPath, false)
@@ -331,7 +353,7 @@ object IndexLayout {
   def writeJobDescriptor(spark: SparkSession, segPath: String,
       d: JobDescriptor): Unit = {
     val fs = fsOf(spark, segPath)
-    val out = fs.create(new Path(segPath, "job.txt"), true)
+    val out = fs.create(new Path(jobFile(segPath)), true)
     val bucketsLine = if (d.buckets > 0) s"buckets=${d.buckets}\n" else ""
     try out.write(
       (s"kind=${d.kind}\nidOffset=${d.idOffset}\n" +
@@ -343,7 +365,7 @@ object IndexLayout {
   def readJobDescriptor(spark: SparkSession,
       segPath: String): Option[JobDescriptor] = {
     val fs = fsOf(spark, segPath)
-    val p = new Path(segPath, "job.txt")
+    val p = new Path(jobFile(segPath))
     if (!fs.exists(p)) return None
     val in = fs.open(p)
     val txt =
@@ -382,13 +404,8 @@ object IndexLayout {
       .flatMap(sd => readJobDescriptor(spark, s"$indexDir/$sd"))
       .map(_.buckets).find(_ > 0)
     recorded.map(DetectedBuckets(_, recorded = true)).orElse {
-      val fs = fsOf(spark, indexDir)
-      val counts = segdirs.flatMap { sd =>
-        val p = new Path(s"$indexDir/$sd/postings")
-        if (!fs.exists(p)) None
-        else Some(fs.listStatus(p)
-          .count(_.getPath.getName.startsWith("termBucket=")))
-      }.filter(_ > 0)
+      val counts = segdirs
+        .map(sd => bucketDirs(spark, s"$indexDir/$sd").size).filter(_ > 0)
       if (counts.isEmpty) None
       else Some(DetectedBuckets(counts.max, recorded = false))
     }
@@ -403,7 +420,7 @@ object IndexLayout {
   def tombstonePaths(spark: SparkSession, indexDir: String,
       segdirs: Seq[String]): Seq[String] = {
     val fs = fsOf(spark, indexDir)
-    Seq(s"$indexDir/tombstones").filter(p => fs.exists(new Path(p))) ++
+    Seq(tombstonesDir(indexDir)).filter(p => fs.exists(new Path(p))) ++
       supersedesPaths(spark, indexDir, segdirs)
   }
 
@@ -415,18 +432,99 @@ object IndexLayout {
   def supersedesPaths(spark: SparkSession, indexDir: String,
       segdirs: Seq[String]): Seq[String] = {
     val fs = fsOf(spark, indexDir)
-    segdirs.map(sd => s"$indexDir/$sd/supersedes")
+    segdirs.map(sd => supersedesDir(s"$indexDir/$sd"))
       .filter(p => fs.exists(new Path(p)))
   }
 
   def postingsPaths(spark: SparkSession, indexDir: String): Seq[String] =
-    live(spark, indexDir).map(sd => s"$indexDir/$sd/postings")
+    live(spark, indexDir).map(sd => postingsDir(s"$indexDir/$sd"))
 
   def docsPaths(spark: SparkSession, indexDir: String): Seq[String] =
-    live(spark, indexDir).map(sd => s"$indexDir/$sd/docs")
+    live(spark, indexDir).map(sd => docsDir(s"$indexDir/$sd"))
 
-  def statsPaths(spark: SparkSession, indexDir: String): Seq[String] =
-    live(spark, indexDir).map(sd => s"$indexDir/$sd/stats")
+  // ------------------------------------------------------ shared readers
+
+  /** The `termBucket=N` partition dirs of a segment's postings, as
+    * (bucket, dir); empty when the segment has no postings dir.
+    */
+  private[index] def bucketDirs(spark: SparkSession, seg: String): Seq[(Int, Path)] = {
+    val fs = fsOf(spark, seg)
+    val p = new Path(postingsDir(seg))
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith(BucketPrefix))
+      .map(d => d.getName.stripPrefix(BucketPrefix).toInt -> d)
+  }
+
+  /** Whether a table dir's write job committed (its `_SUCCESS` marker). */
+  def committed(spark: SparkSession, table: String): Boolean =
+    fsOf(spark, table).exists(new Path(table, "_SUCCESS"))
+
+  /** The docs tables of `segdirs` as one scan. */
+  def readDocs(spark: SparkSession, indexDir: String,
+      segdirs: Seq[String]): DataFrame =
+    spark.read.parquet(segdirs.map(sd => docsDir(s"$indexDir/$sd")): _*)
+
+  /** The postings of `segdirs`: each generation is loaded as its own
+    * relation and the relations unioned (Spark cannot infer the termBucket
+    * partitioning across multiple roots — a multi-root read throws
+    * CONFLICTING_DIRECTORY_STRUCTURES); predicate pushdown distributes over
+    * the union, so bucket pruning still applies per generation.
+    */
+  def readPostings(spark: SparkSession, indexDir: String,
+      segdirs: Seq[String]): DataFrame =
+    segdirs.map(sd => spark.read.parquet(postingsDir(s"$indexDir/$sd")))
+      .reduce(_.unionByName(_))
+
+  /** docId tables (tombstones, supersedes) under an explicit schema: an
+    * upsert batch with no overlapping urls writes an empty, schema-less dir.
+    */
+  def readIds(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.schema("docId LONG").parquet(paths: _*)
+
+  /** The ids a live segment set hides ([[tombstonePaths]]); None when
+    * nothing is deleted or superseded.
+    */
+  def readTombstones(spark: SparkSession, indexDir: String,
+      segdirs: Seq[String]): Option[DataFrame] = {
+    val paths = tombstonePaths(spark, indexDir, segdirs)
+    if (paths.isEmpty) None else Some(readIds(spark, paths))
+  }
+
+  /** The committed data files of the global tombstones dir at this instant,
+    * as paths. Dot- and underscore-names are left out: they are markers or
+    * an in-flight Deletes job's `_temporary` output.
+    */
+  def committedTombstoneFiles(spark: SparkSession,
+      indexDir: String): Seq[String] = {
+    val fs = fsOf(spark, indexDir)
+    val dir = new Path(tombstonesDir(indexDir))
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).map(_.getPath.getName)
+      .filter(n => !n.startsWith(".") && !n.startsWith("_")).toSeq
+      .map(n => s"${tombstonesDir(indexDir)}/$n")
+  }
+
+  /** Record the tombstone files a full merge folds into segment `seg`
+    * (a dir path), for [[condemnFoldedTombstones]] after the flip.
+    */
+  def writeFoldedTombstones(spark: SparkSession, seg: String,
+      files: Seq[String]): Unit = {
+    val out = fsOf(spark, seg).create(new Path(foldedTombstonesFile(seg)), true)
+    try out.write((files.map(new Path(_).getName).mkString("\n") + "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** A segment's docsmap (file, urlMin, urlMax), or None when the segment
+    * has none (pre-docsmap, or an in-flight append whose map has not
+    * committed yet).
+    */
+  def readDocsMap(spark: SparkSession, seg: String): Option[DataFrame] = {
+    val p = docsMapDir(seg)
+    if (!committed(spark, p)) None
+    else Some(spark.read.parquet(p).select("file", "urlMin", "urlMax"))
+  }
 
   private def live(spark: SparkSession, indexDir: String): Seq[String] =
     current(spark, indexDir).getOrElse(throw new IllegalStateException(
@@ -451,20 +549,17 @@ object IndexLayout {
       segdirs: Seq[String]): CorpusStats = {
     import spark.implicits._
     import org.apache.spark.sql.functions.lit
-    val parts = segdirs.map(sd => s"$indexDir/$sd/stats").flatMap { p =>
+    val parts = segdirs.map(sd => statsDir(s"$indexDir/$sd")).flatMap { p =>
       val df = spark.read.parquet(p)
       val withMax = // pre-r5 stats files lack maxDocId
         if (df.columns.contains("maxDocId")) df
         else df.withColumn("maxDocId", lit(-1L))
       withMax.as[CorpusStats].collect()
     }
-    val n = parts.map(_.n).sum
-    val tt = parts.map(_.totalTerms).sum
-    val ttl = parts.map(_.titleTerms).sum
     val maxId =
       if (parts.isEmpty || parts.exists(_.maxDocId < 0)) -1L
       else parts.map(_.maxDocId).max
-    CorpusStats(n, if (n == 0) 0.0 else tt.toDouble / n, tt,
-      if (n == 0) 0.0 else ttl.toDouble / n, ttl, maxId)
+    CorpusStats.of(parts.map(_.n).sum, parts.map(_.totalTerms).sum,
+      parts.map(_.titleTerms).sum, maxId)
   }
 }

@@ -1,23 +1,9 @@
 package graft.index
 
-import java.sql.Timestamp
-
 /** Physical index tables (FIXTURES.md §2; SURVEY.md §1.3). All standard Spark
   * types — the whole index is "just tables", which is what makes partition
   * pruning, compaction and resume plain relational jobs.
   */
-
-/** Document store row — the analog of Solr's stored fields. `doclen` /
-  * `titleLen` are the per-field token counts (compaction re-derives field
-  * stats from them without touching the source corpus).
-  */
-final case class DocRow(
-    docId: Long,
-    url: String,
-    warc_ts: Timestamp,
-    lang: String,
-    doclen: Long,
-    titleLen: Long)
 
 /** One compressed posting segment: a docId-range slice of one term's posting
   * list. Non-skewed terms have exactly one segment (segment=0); terms with
@@ -86,6 +72,17 @@ final case class PostingSegment(
 final case class CorpusStats(n: Long, avgdl: Double, totalTerms: Long,
     titleAvgdl: Double = 0.0, titleTerms: Long = 0L, maxDocId: Long = -1L)
 
+object CorpusStats {
+  /** Stats from token sums: each field's avgdl is its token total divided
+    * by n (0.0 for no docs). Build, compaction and
+    * [[IndexLayout.combinedStats]] all derive avgdl here.
+    */
+  def of(n: Long, totalTerms: Long, titleTerms: Long,
+      maxDocId: Long): CorpusStats =
+    CorpusStats(n, if (n == 0) 0.0 else totalTerms.toDouble / n, totalTerms,
+      if (n == 0) 0.0 else titleTerms.toDouble / n, titleTerms, maxDocId)
+}
+
 /** Per-bucket build lineage + metrics — the checkpoint manifest
   * (north_rule: "resumable from checkpoint with per-partition lineage +
   * metrics"). A bucket is complete iff its manifest row says so; resume
@@ -102,11 +99,6 @@ final case class ManifestRow(
     inputFiles: Array[String],
     durationMs: Long,
     status: String)
-
-/** Tombstones for delete-by-id (reference: searchindex.py:83–92) — anti-joined
-  * at query time until compaction rewrites the affected segments.
-  */
-final case class Tombstone(docId: Long)
 
 /** Segment-dir job record (see IndexLayout.writeJobDescriptor): kind is
   * "build" | "append" | "compaction"; `publish` is the exact segment set the
@@ -141,7 +133,8 @@ object IndexConf {
   *                      published, [[Compaction]] runs immediately after the
   *                      pointer flip — the Solr/Lucene background-merge
   *                      analog (SURVEY.md §4.2). Bounds query planning
-  *                      (readPostings unions one relation per generation)
+  *                      (IndexLayout.readPostings unions one relation per
+  *                      generation)
   *                      under continuous streaming ingest, which otherwise
   *                      creates a generation per micro-batch without bound.
   *                      The policy is TIERED (IndexBuilder.maybeAutoCompact):

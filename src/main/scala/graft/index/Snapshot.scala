@@ -18,10 +18,10 @@ final case class SnapshotReport(segdirs: Seq[String],
   *    create new segdirs and flip the pointer), so copying the set named by
   *    one pointer read is race-free against concurrent writers;
   *  - the global `tombstones/` dir only grows; it is snapshotted as an
-  *    explicit committed-file list (the same rule Compaction uses — dot/
-  *    underscore names are an in-flight Deletes job's `_temporary` output
-  *    and are deliberately excluded), so the copy reflects exactly the
-  *    deletes visible at the list moment;
+  *    explicit committed-file list
+  *    ([[IndexLayout.committedTombstoneFiles]], the list a full merge
+  *    folds), so the copy reflects exactly the deletes visible at the list
+  *    moment;
   *  - per-segment `supersedes/` (upsert victims) are segment content and
   *    travel with their segdir;
   *  - the destination gets its own fresh pointer naming the copied segdirs,
@@ -41,8 +41,8 @@ object Snapshot {
   def run(spark: SparkSession, indexDir: String, outDir: String)
       : SnapshotReport = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val srcFs = new Path(indexDir).getFileSystem(conf)
-    val dstFs = new Path(outDir).getFileSystem(conf)
+    val srcFs = IndexLayout.fsOf(spark, indexDir)
+    val dstFs = IndexLayout.fsOf(spark, outDir)
     val segdirs = IndexLayout.current(spark, indexDir).getOrElse(
       throw new IllegalStateException(
         s"no published index at $indexDir (no current-*.txt pointer)"))
@@ -62,18 +62,11 @@ object Snapshot {
           false, false, conf))
         throw new IllegalStateException(s"copy failed for $sd")
     }
-    // committed tombstone files at this instant (same filter as Compaction)
-    val tombPath = new Path(indexDir, "tombstones")
-    val tombFiles: Seq[Path] =
-      if (srcFs.exists(tombPath))
-        srcFs.listStatus(tombPath).toSeq.map(_.getPath)
-          .filter { p =>
-            val n = p.getName
-            !n.startsWith(".") && !n.startsWith("_")
-          }
-      else Seq.empty
+    // committed tombstone files at this instant (the list Compaction folds)
+    val tombFiles = IndexLayout.committedTombstoneFiles(spark, indexDir)
+      .map(new Path(_))
     if (tombFiles.nonEmpty) {
-      val dstTomb = new Path(out, "tombstones")
+      val dstTomb = new Path(IndexLayout.tombstonesDir(outDir))
       dstFs.mkdirs(dstTomb)
       tombFiles.foreach { p =>
         bytes += srcFs.getFileStatus(p).getLen

@@ -20,26 +20,21 @@ object Ops {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Scan-spread width for per-doc heavy passes (tokenize, shingle, hash):
-    * the driver tables are single-file single-row-group parquet, so every
-    * scan is ONE task and a fused tokenize runs serially no matter how many
-    * cores the session has. The optimization guide's unsplittable-input rule
-    * (§2.5: "one huge unsplittable file … repartition immediately after the
-    * read") applies: spread the narrow (doc_id, text) rows round-robin
-    * across `defaultParallelism` before the per-doc compute. Scale-adaptive
-    * by construction (follows the session's parallelism, never a constant);
-    * `SPARK_GRAFT_SCAN_PARTS=0` disables the extra exchange for deployments
-    * whose input layout already provides scan parallelism (at 100 TB the
-    * corpus arrives as many splittable files and the repartition would be a
-    * pure corpus-scale shuffle tax — set 0 there).
+  /** Scan spread for per-doc heavy passes (tokenize, shingle, hash): the
+    * driver tables are single-file single-row-group parquet, so such a scan
+    * is ONE task and a fused tokenize runs serially no matter how many
+    * cores the session has. The optimization guide's unsplittable-input
+    * rule (§2.5: "one huge unsplittable file … repartition immediately
+    * after the read") applies: a scan with fewer partitions than
+    * `defaultParallelism` is spread round-robin across `defaultParallelism`
+    * before the per-doc compute. A scan already that wide (at 100 TB the
+    * corpus arrives as many splittable files) is left as it is — there the
+    * repartition would be a pure corpus-scale shuffle tax. The partition
+    * count comes from the planned scan; building its RDD runs no job.
     */
-  private def scanParts(spark: SparkSession): Int = sys.env
-    .get("SPARK_GRAFT_SCAN_PARTS").map(_.toInt)
-    .getOrElse(spark.sparkContext.defaultParallelism)
-
-  private def spread(spark: SparkSession, df: DataFrame): DataFrame = {
-    val n = scanParts(spark)
-    if (n <= 0) df else df.repartition(n)
+  private[graft] def spread(spark: SparkSession, df: DataFrame): DataFrame = {
+    val n = spark.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= n) df else df.repartition(n)
   }
 
   /** The engine-wide tokenizer expression (mirrors Analysis.tokenize and the

@@ -149,38 +149,23 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
               s"$indexDir was encoded with $b buckets")
         }
     }
+    // one docs and one postings relation for all queries — building them
+    // per query would re-list the partition directories and re-infer the
+    // schema every time
     new IndexView(sd, IndexLayout.combinedStats(spark, indexDir, sd),
-      readDocs(sd), readPostings(sd))
+      IndexLayout.readDocs(spark, indexDir, sd),
+      IndexLayout.readPostings(spark, indexDir, sd))
   }
-
-  private def readDocs(sd: Seq[String]): DataFrame =
-    spark.read.parquet(sd.map(s => s"$indexDir/$s/docs"): _*)
-
-  /** One relation handle for all queries — building it per query would
-    * re-list the partition directories and re-infer the schema every time.
-    * Each generation is loaded as its own relation and unioned (Spark cannot
-    * infer the termBucket partitioning across multiple roots); predicate
-    * pushdown distributes over the union, so bucket pruning still applies
-    * per generation.
-    */
-  private def readPostings(sd: Seq[String]): DataFrame =
-    sd.map(s => spark.read.parquet(s"$indexDir/$s/postings"))
-      .reduce(_.unionByName(_))
 
   def stats: CorpusStats = view.stats
   def docs: DataFrame = view.docs
 
   /** Delete-by-id tombstones + each live segment's upsert `supersedes/`
     * (written before the pointer flip, visible with it — see
-    * IndexLayout.tombstonePaths). Explicit schema: an upsert batch with no
-    * overlapping urls writes an empty (schema-less) parquet dir.
+    * IndexLayout.tombstonePaths).
     */
-  private def tombstones(v: IndexView): Option[DataFrame] = {
-    val paths = IndexLayout.tombstonePaths(spark, indexDir, v.segdirs)
-    if (paths.isEmpty) None
-    else Some(spark.read.schema("docId LONG").parquet(paths: _*)
-      .select($"docId"))
-  }
+  private def tombstones(v: IndexView): Option[DataFrame] =
+    IndexLayout.readTombstones(spark, indexDir, v.segdirs)
 
   /** The view a query runs against — every query path captures it ONCE at
     * its top. Pointer-staleness guard first, when `autoRefresh` is on
@@ -228,20 +213,14 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       .as[PostingSegment]
   }
 
-  private def loadDocsMap(sd: String): Option[Array[(String, String, String)]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexDir/$sd/docsmap/_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(s"$indexDir/$sd/docsmap")
-      .select($"file", $"urlMin", $"urlMax")
-      .as[(String, String, String)].collect())
-  }
-
   private def docsMapOf(v: IndexView, sd: String, cache: Boolean)
-      : Option[Array[(String, String, String)]] =
-    if (cache) v.docsMapCache.synchronized(
-      v.docsMapCache.getOrElseUpdate(sd, loadDocsMap(sd)))
-    else loadDocsMap(sd)
+      : Option[Array[(String, String, String)]] = {
+    def load = IndexLayout.readDocsMap(spark, s"$indexDir/$sd")
+      .map(_.as[(String, String, String)].collect())
+    if (cache)
+      v.docsMapCache.synchronized(v.docsMapCache.getOrElseUpdate(sd, load))
+    else load
+  }
 
   /** a <= b under UTF-8 BINARY order — the order Spark/Parquet min/max on a
     * string column uses. Java String comparison differs for supplementary
@@ -1572,14 +1551,10 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     // GC's segment dirs, planning over the old segdirs would throw
     // PATH_NOT_FOUND (and stale docsmap entries would point at dead files)
     val v = snapshot() // ONE capture: segdirs/docs below must agree
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val latest = IndexLayout.latestSegDir(spark, indexDir).toSeq
       .filterNot(v.segdirs.contains)
-      .filter { sd =>
-        val p = new org.apache.hadoop.fs.Path(s"$indexDir/$sd/docs/_SUCCESS")
-        fs.exists(p) // docs table fully written (job-commit marker)
-      }
+      .filter(sd => // docs table fully written (job-commit marker)
+        IndexLayout.committed(spark, IndexLayout.docsDir(s"$indexDir/$sd")))
     // docsmap pruning: each segment's per-file url min/max selects the
     // files that CAN contain the key, so planning is O(files containing
     // url) per generation instead of a footer-check task per docs file —
@@ -1587,11 +1562,12 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     // docsmap (pre-docsmap index, or an in-flight append whose map is not
     // committed yet) falls back to its full docs dir.
     val paths = (v.segdirs ++ latest).flatMap { sd =>
+      val docsDir = IndexLayout.docsDir(s"$indexDir/$sd")
       docsMapOf(v, sd, cache = v.segdirs.contains(sd)) match {
         case Some(entries) => entries.iterator
           .filter(e => utf8Le(e._2, url) && utf8Le(url, e._3))
-          .map(e => s"$indexDir/$sd/docs/${e._1}").toSeq
-        case None => Seq(s"$indexDir/$sd/docs")
+          .map(e => s"$docsDir/${e._1}").toSeq
+        case None => Seq(docsDir)
       }
     }
     var cand =
@@ -1601,13 +1577,8 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     // tombstone view the search path anti-joins — global tombstones/ plus
     // supersedes of every segment in this RTG view (incl. the uncommitted
     // one, whose supersedes may not exist yet: best-effort like the rest)
-    val tombPaths = IndexLayout.tombstonePaths(spark, indexDir,
-      v.segdirs ++ latest)
-    if (tombPaths.nonEmpty) {
-      val t = spark.read.schema("docId LONG").parquet(tombPaths: _*)
-        .select($"docId")
-      cand = cand.join(t, Seq("docId"), "left_anti")
-    }
+    IndexLayout.readTombstones(spark, indexDir, v.segdirs ++ latest)
+      .foreach(t => cand = cand.join(t, Seq("docId"), "left_anti"))
     cand.orderBy(desc("docId")).limit(1)
   }
 
@@ -1816,6 +1787,7 @@ object Deletes {
       // unions this directory, so each delete call should land ONE file
       // (bounded: deleteAllByQuery flushes at most once per flushEvery ids)
       docIds.toDS().coalesce(1).toDF("docId")
-        .write.mode(SaveMode.Append).parquet(s"$indexDir/tombstones")
+        .write.mode(SaveMode.Append)
+        .parquet(IndexLayout.tombstonesDir(indexDir))
   }
 }

@@ -73,6 +73,8 @@ class AppendSpec extends AnyFunSuite {
     val hits = engine.search("the", 50).collect().map(_.getLong(0))
     assert(hits.exists(_ < nA) && hits.exists(_ >= nA),
       s"expected hits from both batches, got ${hits.toSeq}")
+    SegmentChecks.assertSegment(dir, "seg-000000")
+    SegmentChecks.assertSegment(dir, "seg-000001", "supersedes")
   }
 
   test("resume finishes an append killed before (or during) publish") {
@@ -274,5 +276,8 @@ class AppendSpec extends AnyFunSuite {
     assert(engine.search("replacementtoken", 10).collect().length == 1)
     assert(!engine.search("the", 200).collect().map(_.getLong(0))
       .contains(oldId))
+    // the upsert batch is retired but within its GC grace; the merge is live
+    SegmentChecks.assertSegment(dir, "seg-000001", "supersedes")
+    SegmentChecks.assertSegment(dir, IndexLayout.current(spark, dir).get.head)
   }
 }

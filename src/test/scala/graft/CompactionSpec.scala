@@ -83,6 +83,7 @@ class CompactionSpec extends AnyFunSuite {
           assert(!got.exists(g => victims.contains(g._1)))
         }
       }
+    SegmentChecks.assertSegment(dir, live)
   }
 
   // ---- tiered (partial) merge: Compaction.merge folds a generation
@@ -124,6 +125,7 @@ class CompactionSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the base-targeting tombstone must SURVIVE a partial merge
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/tombstones")))
+    SegmentChecks.assertSegment(dir, after.last, "supersedes")
 
     // oracle: base docs ALL stay (the tombstoned and base-superseded ones
     // still count in the unmerged base's stats/postings — filtered from
@@ -164,6 +166,7 @@ class CompactionSpec extends AnyFunSuite {
     assert(full.stats.n == (nA - 2) + (nB - 1) + 12)
     val fullIds = full.search("the", 500).collect().map(_.getLong(0)).toSet
     assert(!fullIds.contains(5L) && !fullIds.contains(baseVictimId))
+    SegmentChecks.assertSegment(dir, IndexLayout.current(spark, dir).get.head)
   }
 
   test("partial-merge crash before publish: old set serves; resume finishes, tombstones survive") {

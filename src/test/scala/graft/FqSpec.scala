@@ -268,23 +268,7 @@ class FqSpec extends AnyFunSuite {
       "facet fq+qop")
   }
 
-  /** Run `f` and count the Spark jobs it launched. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = f
-      org.apache.spark.TestListenerBus.drain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  import SparkTestSession.jobsOf
 
   test("cache hits launch no Spark job: after one warm call, a repeat of " +
       "each cached shape runs 0 jobs") {

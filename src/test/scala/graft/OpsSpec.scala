@@ -23,6 +23,28 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("spread repartitions only a scan narrower than defaultParallelism, " +
+      "and decides without a Spark job") {
+    val par = spark.sparkContext.defaultParallelism
+    val wide = SparkTestSession.tempDir("graft-spread")
+    spark.read.parquet(s"$dir/documents.parquet").repartition(par)
+      .write.mode("overwrite").parquet(s"$wide/documents.parquet")
+    def spreadPlan(d: String): String = {
+      val scan = spark.read.parquet(s"$d/documents.parquet")
+        .select("doc_id", "text")
+      val (spread, jobs) =
+        SparkTestSession.jobsOf(graft.ops.Ops.spread(spark, scan))
+      assert(jobs == 0, s"spread over $d ran $jobs jobs")
+      spread.queryExecution.executedPlan.toString
+    }
+    assert(spreadPlan(dir).contains("RoundRobinPartitioning"),
+      "the single-file fixture scan must be spread")
+    assert(!spreadPlan(wide).contains("RoundRobinPartitioning"),
+      s"a scan of >= $par files must keep its partitioning")
+    assert(graft.ops.Ops.tokenizeTf(spark, wide).count() ==
+      graft.ops.Ops.tokenizeTf(spark, dir).count())
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

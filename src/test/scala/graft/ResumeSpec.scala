@@ -56,6 +56,7 @@ class ResumeSpec extends AnyFunSuite {
     val m2 = spark.read.parquet(s"$dir/$seg/manifest").as[ManifestRow].collect()
     assert(m2.map(_.partitionId).sorted.toSeq == (0 until conf.numBuckets))
     assert(m2.forall(_.status == "complete"))
+    SegmentChecks.assertSegment(dir, seg)
   }
 
   test("resume replays the RECORDED bucket count, not the caller's conf") {

@@ -19,6 +19,24 @@ object SparkTestSession {
     s
   }
 
+  /** `f`'s result and the number of Spark jobs it launched. */
+  def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.TestListenerBus.drain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   def tempDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
     d.deleteOnExit()

@@ -436,12 +436,6 @@ object IndexLayout {
       .filter(p => fs.exists(new Path(p)))
   }
 
-  def postingsPaths(spark: SparkSession, indexDir: String): Seq[String] =
-    live(spark, indexDir).map(sd => postingsDir(s"$indexDir/$sd"))
-
-  def docsPaths(spark: SparkSession, indexDir: String): Seq[String] =
-    live(spark, indexDir).map(sd => docsDir(s"$indexDir/$sd"))
-
   // ------------------------------------------------------ shared readers
 
   /** The `termBucket=N` partition dirs of a segment's postings, as

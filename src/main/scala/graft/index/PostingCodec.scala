@@ -295,7 +295,6 @@ final class SegCursor(val seg: PostingSegment, idfv: Double, avgdl: Double) {
   def curDoc: Long = blockDocs(pos)
   def curScore: Double =
     BM25.score(blockTfs(pos), blockDls(pos), avgdl, idfv)
-  def curTf: Long = blockTfs(pos)
 
   /** Within-doc token positions of the current posting (ascending). Empty if
     * the segment has no positions stream.
@@ -311,15 +310,6 @@ final class SegCursor(val seg: PostingSegment, idfv: Double, avgdl: Double) {
   def currentBlockMax: Double =
     idfv * BM25.tfNorm(seg.blockMaxTf(blockIdx), seg.blockMinDl(blockIdx), avgdl)
   def currentBlockLast: Long = seg.blockLastDocId(blockIdx)
-  def maxScore: Double = {
-    var m = 0.0; var b = 0
-    while (b < nBlocks) {
-      val s = BM25.tfNorm(seg.blockMaxTf(b), seg.blockMinDl(b), avgdl)
-      if (s > m) m = s
-      b += 1
-    }
-    idfv * m
-  }
 
   private def decodeBlock(b: Int): Unit = {
     blockIdx = b

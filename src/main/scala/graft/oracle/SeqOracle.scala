@@ -594,14 +594,4 @@ final class SeqOracle(docs: Seq[OracleDoc]) {
     }
     candidatesFq(query, df, fq, qOp, qf, tie).map(c => key(c._1)).distinct.size.toLong
   }
-
-  /** Exhaustive score of one doc for a term list (test helper). */
-  def scoreDoc(docId: Long, terms: Seq[String]): Double =
-    terms.distinct.sorted.foldLeft(0.0) { (acc, t) =>
-      postings.get(t).flatMap(_.find(_._1 == docId)) match {
-        case Some((_, tf)) =>
-          acc + BM25.score(tf, dlOf(t, docId), avgdlOf(t), BM25.idf(n, df(t)))
-        case None => acc
-      }
-    }
 }

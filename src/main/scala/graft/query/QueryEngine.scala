@@ -30,12 +30,18 @@ import graft.index._
   *    by docId window and travel in the SAME shuffle as the posting
   *    segments (and each map partition's partial per-term df, so every
   *    window sums the exact global df) — each window task builds its own
-  *    slice as a window-local bitmap. No driver materialization, no
-  *    broadcast, no 2^31-docId assumption, at any selectivity.
+  *    slice as a window-local bitmap. No broadcast, no 2^31-docId
+  *    assumption, at any selectivity. The allow ids are never materialized
+  *    on the driver; the tombstone ids enter from the driver's deny set
+  *    when it is under the cap, else from a scan of the tombstone tables.
   *  - driver fast path: filter docIds are collected only up to a hard cap
   *    ([[QueryEngine.MaxDriverFilterDocs]]); a larger filter silently routes
   *    the query to the distributed path. The cap bounds driver memory
   *    regardless of corpus size.
+  *  - deny set: the tombstone ids, collected under the same cap and cached
+  *    per view, keyed by the committed file listing of the global
+  *    `tombstones/` dir ([[denyIds]]) — Solr's live-docs bitset, reused
+  *    until the next delete, so a repeated query runs no Spark job.
   *
   * The engine reads the index through the generation pointer
   * ([[IndexLayout]]): segments of the SAME term may come from multiple
@@ -69,17 +75,20 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     * [[invalidateCache]] re-resolves, so one engine instance survives
     * compaction/append (the round-1 lazy vals went stale).
     *
-    * The four query caches live INSIDE the view (r5): they are valid
+    * The five query caches live INSIDE the view (r5): they are valid
     * exactly as long as the generation set they were read from, so a view
     * swap retires them atomically with the relations. The old
     * clear-on-invalidate scheme had a poisoning window — a query holding
     * the old view could `put` a stale postings sample AFTER the clear,
     * and every later query on the new view then served superseded docs
     * from the cache. Now an in-flight query writes into ITS view's cache,
-    * which is unreachable from queries on the new view.
+    * which is unreachable from queries on the new view. The deny cache is
+    * also keyed by the tombstone listing, which deletes change without a
+    * swap.
     */
   private final class IndexView(val segdirs: Seq[String],
-      val stats: CorpusStats, val docs: DataFrame, val postings: DataFrame) {
+      val stats: CorpusStats, val docs: DataFrame, val postings: DataFrame,
+      val supersedes: Seq[String]) {
     /** Bounded cache of small pruned-scan results keyed by the query's term
       * set — the analog of Solr/Lucene's filter/block caches (hot postings
       * stay resident). Only results under the driver threshold are cached,
@@ -100,6 +109,16 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       * term key, so the families cannot collide.
       */
     val prefixCache = lru[Seq[String]](64)
+
+    /** Tombstone deny sets ([[denyIds]]): the committed file listing of the
+      * global `tombstones/` dir → the sorted ids of those files plus this
+      * view's [[supersedes]] (None = over MaxDriverFilterDocs, cached too
+      * so an over-cap set is not re-collected to learn it again). Deletes
+      * only add files under new names, and files leave the dir only after
+      * a pointer flip, so a listing never comes back with other content:
+      * the newest key and one a racing query may still be reading suffice.
+      */
+    val denyCache = lru[Option[Array[Long]]](2)
 
     /** Per-segment docsmap (file → url min/max) for realtimeGet planning.
       * Cached only for PUBLISHED segments of this view — an in-flight
@@ -154,7 +173,8 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     // schema every time
     new IndexView(sd, IndexLayout.combinedStats(spark, indexDir, sd),
       IndexLayout.readDocs(spark, indexDir, sd),
-      IndexLayout.readPostings(spark, indexDir, sd))
+      IndexLayout.readPostings(spark, indexDir, sd),
+      IndexLayout.supersedesPaths(spark, indexDir, sd))
   }
 
   def stats: CorpusStats = view.stats
@@ -166,6 +186,19 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     */
   private def tombstones(v: IndexView): Option[DataFrame] =
     IndexLayout.readTombstones(spark, indexDir, v.segdirs)
+
+  /** The sorted ids the view hides — exactly [[tombstones]] at this
+    * instant — or None over MaxDriverFilterDocs. One listing of the global
+    * `tombstones/` dir per call; the ids are read from the LISTED files, so
+    * the value is a pure function of its key and a delete that lands
+    * mid-read cannot be stored under the older listing.
+    */
+  private def denyIds(v: IndexView): Option[Array[Long]] = {
+    val files = IndexLayout.committedTombstoneFiles(spark, indexDir).sorted
+    if (files.isEmpty && v.supersedes.isEmpty) Some(Array.empty[Long])
+    else cached(v.denyCache, files.mkString("\n"))(
+      boundedIds(IndexLayout.readIds(spark, files ++ v.supersedes)))
+  }
 
   /** The view a query runs against — every query path captures it ONCE at
     * its top. Pointer-staleness guard first, when `autoRefresh` is on
@@ -539,8 +572,9 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     *    in EVERY array (fq intersection semantics). Each set reads through
     *    the view's filterCache — Solr's filterCache: first use pays the
     *    match-set job, repeats are a map lookup;
-    *  - deny ids: the tombstones, re-read on every query. Deletes do not
-    *    flip the pointer, so a per-view copy would show deleted docs again.
+    *  - deny ids: the tombstones, through the view's denyCache keyed by
+    *    the current tombstone listing ([[denyIds]]) — a delete changes the
+    *    key, so the next query re-reads them and the repeat after is a hit.
     * None = some set is over the driver cap → the caller takes the
     * relational/distributed plan instead of materializing it.
     */
@@ -562,8 +596,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       acc.flatMap(arrs => cachedIds(filterCacheKey("fq", Seq(s), df, qOp))(
         fqMatchSet(v, fqAst)).map(arrs :+ _))
     }
-    val deny = tombstones(v).fold(Option(Array.empty[Long]))(boundedIds)
-    for (a <- allow; d <- deny) yield (a, d)
+    for (a <- allow; d <- denyIds(v)) yield (a, d)
   }
 
   /** The driver offer test: `id` is in every sorted allow array and not in
@@ -725,13 +758,20 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val tieB = rq.tie
 
     // one shuffle keyed by window: segments with their partial df, allow
-    // ids and tombstone ids, each input tagging its own rows
+    // ids and tombstone ids, each input tagging its own rows. A bounded deny
+    // set enters from the driver's cache as one partition, in place of a
+    // scan of the tombstone tables
     val idsByWindow = (ids: DataFrame, deny: Boolean) =>
       ids.as[Long].rdd.mapPartitions(QueryEngine.idRows(_, rangeLen, deny))
+    val denyRows = denyIds(v) match {
+      case Some(d) if d.isEmpty => None
+      case Some(d) => Some(spark.sparkContext.parallelize(d.toSeq, 1)
+        .mapPartitions(QueryEngine.idRows(_, rangeLen, true)))
+      case None => tombstones(v).map(idsByWindow(_, true))
+    }
     val rows = spark.sparkContext.union(
       segs.rdd.mapPartitions(QueryEngine.segmentRows(_, rangeLen, windows)) +:
-        (allowIds.map(idsByWindow(_, false)) ++
-          tombstones(v).map(idsByWindow(_, true))).toSeq)
+        (allowIds.map(idsByWindow(_, false)) ++ denyRows).toSeq)
     val top = rows
       // Int keys in [0, windows) hash to themselves: partition id = window id
       .partitionBy(new org.apache.spark.HashPartitioner(windows))

@@ -426,7 +426,7 @@ class CompactionSpec extends AnyFunSuite {
       Compaction.runInternal(spark, dir, conf, failBeforePublish = true)
     }
     Deletes.delete(spark, dir, Seq(12L)) // lands while the merge is "down"
-    val url12 = spark.read.parquet(IndexLayout.docsPaths(spark, dir): _*)
+    val url12 = spark.read.parquet(SegmentChecks.docsPaths(dir): _*)
       .filter($"docId" === 12L).select($"url").head().getString(0)
     IndexBuilder.resume(spark,
       spark.emptyDataset[graft.corpus.WebDoc], dir, conf)

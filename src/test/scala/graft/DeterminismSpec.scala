@@ -22,7 +22,7 @@ class DeterminismSpec extends AnyFunSuite {
       : (Seq[(String, Int, Int, Seq[Long], Seq[Long], Seq[Long], Seq[Seq[Int]])],
          Seq[(Long, String)]) = {
     val segs = spark.read
-      .parquet(IndexLayout.postingsPaths(spark, dir): _*)
+      .parquet(SegmentChecks.postingsPaths(dir): _*)
       .as[PostingSegment]
       .collect()
       .map { s =>
@@ -32,7 +32,7 @@ class DeterminismSpec extends AnyFunSuite {
       }
       .sortBy(t => (t._1, t._2))
       .toSeq
-    val docs = spark.read.parquet(IndexLayout.docsPaths(spark, dir): _*)
+    val docs = spark.read.parquet(SegmentChecks.docsPaths(dir): _*)
       .select("docId", "url").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
     (segs, docs)

@@ -112,7 +112,7 @@ class EngineSpec extends AnyFunSuite {
     assert(stats.totalTerms == oracle.totalTerms)
 
     val segs = spark.read
-      .parquet(IndexLayout.postingsPaths(spark, indexDir): _*)
+      .parquet(SegmentChecks.postingsPaths(indexDir): _*)
       .as[PostingSegment].collect()
     // per-term: segment counts sum to global df, segment cfs to global cf;
     // docIds sorted; segments docId-disjoint
@@ -136,7 +136,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("docs table: dense docIds in url order, doclen matches tokenizer") {
-    val docsT = spark.read.parquet(IndexLayout.docsPaths(spark, indexDir): _*)
+    val docsT = spark.read.parquet(SegmentChecks.docsPaths(indexDir): _*)
       .orderBy("docId").collect()
     assert(docsT.length == NDocs)
     val urls = docsT.map(_.getAs[String]("url"))
@@ -174,7 +174,7 @@ class EngineSpec extends AnyFunSuite {
       .map(_.getLong(0))
     assert(unfiltered.toSet != filtered.toSet,
       "url-filtered result should differ from unfiltered")
-    val docsT = spark.read.parquet(IndexLayout.docsPaths(spark, indexDir): _*)
+    val docsT = spark.read.parquet(SegmentChecks.docsPaths(indexDir): _*)
       .select("docId", "url").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     filtered.foreach(id =>

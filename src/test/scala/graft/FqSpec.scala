@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.CorpusGen
 import graft.index.{IndexBuilder, IndexConf}
 import graft.oracle.{OracleDoc, SeqOracle}
-import graft.query.{QueryEngine, QueryParser, Wand}
+import graft.query.{Deletes, QueryEngine, QueryParser, Wand}
 
 /** Solr fq / q.op / facet.query surface (round 5):
   *  - fq match sets constrain results through ALL THREE physical paths
@@ -272,7 +272,8 @@ class FqSpec extends AnyFunSuite {
 
   test("cache hits launch no Spark job: after one warm call, a repeat of " +
       "each cached shape runs 0 jobs") {
-    // the index has no tombstones: their ids are re-read on every query
+    // the index has no tombstones or supersedes, so the deny set is empty
+    // without a read; the next test covers an index with both
     val shapes: Seq[(String, Seq[String])] = Seq(
       ("w00017", Nil),               // segCache
       ("lang:no AND w00099", Nil),   // + stored-field filter ids
@@ -287,6 +288,49 @@ class FqSpec extends AnyFunSuite {
       assert(n == 0, s"repeat of q=$q fq=$fq ran $n jobs")
       assert(repeat == warm, s"q=$q fq=$fq: repeat differs from warm call")
     }
+  }
+
+  test("deny set cached per tombstone listing: repeats on an index with " +
+      "deletes and upserts run 0 jobs, an outside delete shows at once") {
+    val dir = SparkTestSession.tempDir("graft-fq-deny")
+    val cf = IndexConf(numBuckets = 4, segmentMaxDocs = 32)
+    IndexBuilder.build(spark, CorpusGen.generate(spark, 200), dir, cf)
+    // the first 20 urls again: 20 upserts into the new generation's
+    // supersedes/, plus one delete-by-id file in the global tombstones/
+    IndexBuilder.append(spark, CorpusGen.generate(spark, 20), dir, cf)
+    Deletes.delete(spark, dir, Seq(150L))
+    assert(new java.io.File(dir).listFiles().map(_.getName).contains(
+      "tombstones"), "fixture has no tombstones dir")
+    assert(new java.io.File(dir).listFiles().exists(d =>
+      new java.io.File(d, "supersedes").isDirectory), "fixture has no " +
+      "supersedes")
+    val eng = new QueryEngine(spark, dir, 4)
+    val shapes: Seq[(String, Seq[String])] = Seq(
+      ("the", Nil), ("lang:no AND w00017", Nil), ("*:*", Seq("lang:no")))
+    def repeatsRunNoJob(): Unit = shapes.foreach { case (q, fq) =>
+      val warm = rows(eng.search(q, 10, fq = fq))
+      val (repeat, n) = jobsOf(rows(eng.search(q, 10, fq = fq)))
+      assert(n == 0, s"repeat of q=$q fq=$fq ran $n jobs")
+      assert(repeat == warm, s"q=$q fq=$fq: repeat differs from warm call")
+    }
+    repeatsRunNoJob()
+    val before = rows(eng.search("the", 10))
+    assert(!before.map(_._1).contains(150L), "deleted doc 150 is visible")
+    // a delete from outside the engine, no invalidateCache: the new
+    // tombstone file changes the listing, so the next query re-reads
+    val victim = before.head._1
+    Deletes.delete(spark, dir, Seq(victim))
+    val after = rows(eng.search("the", 10))
+    assert(!after.map(_._1).contains(victim), s"deleted $victim is visible")
+    assert(after == rows(eng.searchExhaustive("the", 10)),
+      "driver vs exhaustive after the delete")
+    repeatsRunNoJob()
+    // the distributed path takes the cached set into its one shuffle
+    val dist = new QueryEngine(spark, dir, 4, driverWandMaxSegments = 0)
+    rows(dist.search("the", 10)) // warm
+    val (got, n) = jobsOf(rows(dist.search("the", 10)))
+    assert(n == 1, s"distributed repeat ran $n jobs")
+    assert(got == after, "distributed vs driver after the delete")
   }
 
   test("distributed top-k: one Spark job per query, ranked like the " +

@@ -20,7 +20,7 @@ class ResumeSpec extends AnyFunSuite {
   private val conf = IndexConf(numBuckets = 6, segmentMaxDocs = 64)
 
   private def logicalPostings(dir: String) =
-    spark.read.parquet(IndexLayout.postingsPaths(spark, dir): _*)
+    spark.read.parquet(SegmentChecks.postingsPaths(dir): _*)
       .as[PostingSegment].collect()
       .map { s =>
         val (ids, tfs, dls) = PostingCodec.decodeAll(s)
@@ -253,7 +253,7 @@ class ResumeSpec extends AnyFunSuite {
     // never ran → the old index's tombstones are back on disk
     stale.toDS().toDF("docId").coalesce(1).write
       .parquet(s"$dir/tombstones")
-    val url0 = spark.read.parquet(IndexLayout.docsPaths(spark, dir): _*)
+    val url0 = spark.read.parquet(SegmentChecks.docsPaths(dir): _*)
       .filter($"docId" === 0L).select($"url").head().getString(0)
     val eng = new QueryEngine(spark, dir, c.numBuckets)
     assert(eng.realtimeGet(url0).count() == 0,

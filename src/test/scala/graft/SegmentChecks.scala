@@ -4,8 +4,22 @@ import org.scalatest.Assertions._
 
 import graft.index.{IndexLayout, ManifestRow, PostingCodec, PostingSegment}
 
-/** Structural checks on a finished segment dir. */
+/** Structural checks on a finished segment dir, and the table paths of an
+  * index's live generations for tests that read them directly.
+  */
 object SegmentChecks {
+
+  /** The postings dir of each live generation of index `dir`. */
+  def postingsPaths(dir: String): Seq[String] =
+    live(dir).map(IndexLayout.postingsDir)
+
+  /** The docs dir of each live generation of index `dir`. */
+  def docsPaths(dir: String): Seq[String] = live(dir).map(IndexLayout.docsDir)
+
+  private def live(dir: String): Seq[String] =
+    IndexLayout.current(SparkTestSession.spark, dir)
+      .getOrElse(throw new IllegalStateException(s"no published index at $dir"))
+      .map(sd => s"$dir/$sd")
 
   /** What every finished segment holds; `extra` names the rest. */
   private val Always =

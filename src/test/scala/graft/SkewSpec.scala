@@ -23,7 +23,7 @@ class SkewSpec extends AnyFunSuite {
       dir, conf)
 
     val segs = spark.read
-      .parquet(IndexLayout.postingsPaths(spark, dir): _*)
+      .parquet(SegmentChecks.postingsPaths(dir): _*)
       .as[PostingSegment].collect()
     // docId-range splitting bounds the AVERAGE segment at segmentMaxDocs;
     // per-range counts fluctuate, so allow 2x before calling it skew

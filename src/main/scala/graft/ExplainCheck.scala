@@ -28,28 +28,25 @@ object ExplainCheck {
       plan.split("\n").filter(l => l.contains("PartitionFilters") ||
         l.contains("PushedFilters") || l.contains("ReadSchema"))
         .foreach(l => println("[plan] " + l.trim.take(1200)))
-      println("=== prefix dictionary scan (w000*) ===")
-      e.prefixScanPlan("w000").split("\n")
-        .filter(l => l.contains("PushedFilters") || l.contains("ReadSchema"))
-        .foreach(l => println("[plan] " + l.trim.take(1200)))
-      // fuzzy/wildcard dictionary scans (r5): the title: StartsWith and the
-      // wildcard literal prefix range must reach parquet as PushedFilters —
-      // only the distance/glob predicate itself runs as the typed filter
-      println("=== fuzzy dictionary scan (title:doc~1) ===")
-      e.fuzzyScanPlan("title:doc", 1).split("\n")
-        .filter(l => l.contains("PushedFilters") || l.contains("ReadSchema"))
-        .foreach(l => println("[plan] " + l.trim.take(1200)))
-      println("=== wildcard dictionary scan (w00?1*) ===")
-      e.wildcardScanPlan("w00?1*").split("\n")
-        .filter(l => l.contains("PushedFilters") || l.contains("ReadSchema"))
-        .foreach(l => println("[plan] " + l.trim.take(1200)))
-      // term-range dictionary scan (r5): BOTH bounds must reach parquet —
-      // the whole expansion is one pruned range scan, no driver matching
-      println("=== term-range dictionary scan (text:{w0001 TO w0002]) ===")
-      e.termRangeScanPlan("", Some("w0001"), Some("w0002"),
-          incLo = false, incHi = true).split("\n")
-        .filter(l => l.contains("PushedFilters") || l.contains("ReadSchema"))
-        .foreach(l => println("[plan] " + l.trim.take(1200)))
+      // dictionary scans: each rule's field keyspace and key range must
+      // reach parquet as PushedFilters (no full-vocabulary decode) — only
+      // the rule's token predicate runs as the typed filter
+      import graft.query.{QueryResolve, TermRangeLit}
+      Seq(
+        "prefix dictionary scan (w000*)" -> QueryResolve.prefixMatch("w000"),
+        "fuzzy dictionary scan (title:doc~1)" ->
+          QueryResolve.fuzzyMatch("title:doc", 1),
+        "wildcard dictionary scan (w00?1*)" ->
+          QueryResolve.wildcardMatch("w00?1*"),
+        "term-range dictionary scan (text:{w0001 TO w0002])" ->
+          QueryResolve.rangeMatch(TermRangeLit("", Some("w0001"),
+            Some("w0002"), incLo = false, incHi = true))
+      ).foreach { case (name, m) =>
+        println(s"=== $name ===")
+        e.dictScanPlan(m).split("\n")
+          .filter(l => l.contains("PushedFilters") || l.contains("ReadSchema"))
+          .foreach(l => println("[plan] " + l.trim.take(1200)))
+      }
       // match-all (*:*, r5): no postings touched — the docs scan must read
       // docId ONLY (ReadSchema column pruning) and the plan must end in a
       // TakeOrderedAndProject(k), never a global sort, so q=*:* costs one

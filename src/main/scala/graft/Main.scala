@@ -428,6 +428,14 @@ object Search {
       if (flags.contains("--distributed"))
         new QueryEngine(spark, indexDir, buckets, driverWandMaxSegments = 0)
       else new QueryEngine(spark, indexDir, buckets)
+    // one sort key: field[:asc|desc], ascending by default
+    def sortKey(s: String): (String, Boolean) = s.split(":", 2) match {
+      case Array(f)          => (f, true)
+      case Array(f, "asc")   => (f, true)
+      case Array(f, "desc")  => (f, false)
+      case Array(f, d) => throw new IllegalArgumentException(
+        s"--sort $f:$d — direction must be asc or desc")
+    }
     // Solr /export handler analog: --export OUT writes the FULL match set
     // (every match, range-partitioned global sort, no driver collect) as
     // parquet. Like /export itself it REQUIRES sort= and fl=, never scores,
@@ -441,13 +449,7 @@ object Search {
         !flags.contains("--delete-all"),
         "--export is the full-result bulk path: --start/--after/--delete " +
           "do not combine with it")
-      val (field, ascending) = opts("--sort").split(":", 2) match {
-        case Array(f)          => (f, true)
-        case Array(f, "asc")   => (f, true)
-        case Array(f, "desc")  => (f, false)
-        case Array(f, d) => throw new IllegalArgumentException(
-          s"--sort $f:$d — direction must be asc or desc")
-      }
+      val (field, ascending) = sortKey(opts("--sort"))
       val fields = opts("--fl").split(",").map(_.trim)
         .filter(_.nonEmpty).toSeq
       val t0 = System.nanoTime()
@@ -465,20 +467,13 @@ object Search {
     // stored field instead of score (docId-ascending tiebreak). Both
     // branches yield the page rows (docId first) so --delete works on
     // either ordering.
+    val fqNote = if (fq.isEmpty) "" else s" fq=${fq.mkString("; ")}"
     val page: Array[org.apache.spark.sql.Row] = opts.get("--sort") match {
       case Some(spec) =>
         // Solr compound sort: comma-separated field[:asc|desc] keys,
         // docId-ascending final tiebreak
         val sorts: Seq[(String, Boolean)] =
-          spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { s =>
-            s.split(":", 2) match {
-              case Array(f)          => (f, true)
-              case Array(f, "asc")   => (f, true)
-              case Array(f, "desc")  => (f, false)
-              case Array(f, d) => throw new IllegalArgumentException(
-                s"--sort $f:$d — direction must be asc or desc")
-            }
-          }
+          spec.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map(sortKey)
         require(after.isEmpty, "--after applies to score-ordered pages only")
         require(!flags.contains("--explain"),
           "--explain applies to score-ordered search only")
@@ -506,7 +501,6 @@ object Search {
         val t0 = System.nanoTime()
         val n = engine.countMatches(query, df, fq, qOp, qf, tie)
         val ms = (System.nanoTime() - t0) / 1e6
-        val fqNote = if (fq.isEmpty) "" else s" fq=${fq.mkString("; ")}"
         println(f"[graft] query='$query'$fqNote numFound=$n latencyMs=$ms%.1f")
         Array.empty[org.apache.spark.sql.Row]
       case None =>
@@ -517,7 +511,6 @@ object Search {
            else engine.search(query, start + k, df, after, fq, qOp, qf, tie))
             .collect().drop(start)
         val ms = (System.nanoTime() - t0) / 1e6
-        val fqNote = if (fq.isEmpty) "" else s" fq=${fq.mkString("; ")}"
         println(f"[graft] query='$query'$fqNote hits=${res.length} latencyMs=$ms%.1f")
         res.zipWithIndex.foreach { case (r, i) =>
           println(f"  ${start + i + 1}%2d. docId=${r.getLong(0)}%8d score=${r.getDouble(1)}%.6f")

@@ -354,7 +354,7 @@ final class SeqOracle(docs: Seq[OracleDoc]) {
     require(toks.length == 1, s"suggest input '$term' must be one token")
     val key = if (field == "text") toks(0) else s"$field:${toks(0)}"
     val pfxLen = key.length - toks(0).length
-    QueryResolve.dictFuzzy(postings.keys.toSeq)(key, 2)
+    QueryResolve.dictMatch(postings.keys, QueryResolve.fuzzyMatch(key, 2))
       .map { k =>
         val t = k.substring(pfxLen)
         (t, graft.query.Fuzzy.distance(t, toks(0)), df(k))
@@ -403,7 +403,8 @@ final class SeqOracle(docs: Seq[OracleDoc]) {
     require(toks.length == 1, s"terms prefix '$prefix' must be one token")
     val key = if (field == "text") toks(0) else s"$field:${toks(0)}"
     val pfxLen = key.length - toks(0).length
-    QueryResolve.dictExpand(postings.keys.toSeq)(key).take(n)
+    QueryResolve.dictMatch(postings.keys, QueryResolve.prefixMatch(key))
+      .take(n)
       .map(k => (k.substring(pfxLen), df(k)))
   }
 
@@ -414,12 +415,9 @@ final class SeqOracle(docs: Seq[OracleDoc]) {
       : Seq[(String, Long)] = {
     val rx = java.util.regex.Pattern.compile(pattern)
     val fieldPfx = if (field == "text") "" else field + ":"
-    postings.keys.toSeq
-      .filter { k =>
-        (if (fieldPfx.isEmpty) !k.contains(":") else k.startsWith(fieldPfx)) &&
-          rx.matcher(k.substring(fieldPfx.length)).matches()
-      }
-      .sorted.take(n)
+    val rule =
+      QueryResolve.DictMatch(fieldPfx, rx.matcher(_).matches(), None, None, n)
+    QueryResolve.dictMatch(postings.keys, rule)
       .map(k => (k.substring(fieldPfx.length), df(k)))
   }
 
@@ -474,7 +472,7 @@ final class SeqOracle(docs: Seq[OracleDoc]) {
   }
 
   private def resolve(ast: QueryAst): ResolvedQuery =
-    QueryResolve.resolve(ast, QueryResolve.dictExpander(postings.keys.toSeq))
+    QueryResolve.resolve(ast, QueryResolve.dictExpander(postings.keys))
 
   /** All matching (docId, score), ordered — the match set behind topK and
     * facet (Solr facets count over every match, not the page). Match =

@@ -13,8 +13,8 @@ package graft.query
   * engine and the correctness oracle share one definition.
   *
   * Tokens here are short ([a-z0-9]+, typically ≤ 20 chars), so the O(|a|·|b|)
-  * matrix with the O(alphabet) last-occurrence table is plenty; the caller
-  * prunes candidates whose length differs by more than `maxEdits` before
+  * matrix with the O(alphabet) last-occurrence table is plenty; [[within]]
+  * rejects candidates whose length differs by more than `maxEdits` before
   * paying for the matrix.
   */
 object Fuzzy {

@@ -246,6 +246,13 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       .as[PostingSegment]
   }
 
+  /** Global df per term from segment metadata: the column-pruned sum of the
+    * per-segment counts over the terms' bucket dirs, no posting decode.
+    */
+  private def dfOf(v: IndexView, terms: Seq[String]): Map[String, Long] =
+    postingsFor(terms, v).groupBy($"term").agg(sum($"count").as("df"))
+      .as[(String, Long)].collect().toMap
+
   private def docsMapOf(v: IndexView, sd: String, cache: Boolean)
       : Option[Array[(String, String, String)]] = {
     def load = IndexLayout.readDocsMap(spark, s"$indexDir/$sd")
@@ -326,9 +333,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     if (scoring.isEmpty) return Seq.empty
     val n = v.stats.n
     val avgdls = avgdlOf(v.stats)
-    val dfByTerm: Map[String, Long] = postingsFor(scoring, v)
-      .groupBy($"term").agg(sum($"count").as("df"))
-      .as[(String, Long)].collect().toMap
+    val dfByTerm = dfOf(v, scoring)
     val entries = postingsFor(scoring, v)
       .filter($"firstDocId" <= docId && $"lastDocId" >= docId)
       .collect().toSeq
@@ -345,21 +350,13 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
         }
       }
       .sortBy(_.term)
-    if (rq.groups.isEmpty || rq.tie == 1.0) entries
-    else {
-      // edismax tie factors (ResolvedQuery.groups rule): the entry list IS
-      // the term-sorted contribution list, so the per-entry factored
-      // scores still left-fold to the hit score bit-for-bit
-      val gmax = entries.groupBy(e => rq.groups.getOrElse(e.term, 0))
-        .map { case (g, es) => g -> es.map(_.score).max }
-      val taken = mutable.Set.empty[Int]
-      entries.map { e =>
-        val g = rq.groups.getOrElse(e.term, 0)
-        if (g == 0) e
-        else if (!taken(g) && e.score == gmax(g)) { taken += g; e }
-        else e.copy(score = rq.tie * e.score)
-      }
-    }
+    // edismax tie factors: the entry list IS the term-sorted contribution
+    // list, so the per-entry factored scores still left-fold to the hit
+    // score bit-for-bit
+    val scores = entries.map(_.score).toArray
+    new Wand.TieFold(entries.map(e => rq.groups.getOrElse(e.term, 0)).toArray,
+      rq.tie)(scores)
+    entries.zip(scores).map { case (e, f) => e.copy(score = f) }
   }
 
   /** Per-term avgdl (per-field BM25 length norms; title terms carry the
@@ -370,163 +367,54 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
 
   // -------------------------------------------------- dictionary expansion
 
-  /** Dictionary expansion of a trailing-* prefix: a term-RANGE scan over the
-    * sorted term column (Parquet min/max prunes row groups in every bucket —
-    * no full-vocabulary decode; the prefix hashes across buckets, so bucket
-    * pruning does not apply). Ordering + cap must mirror
-    * [[QueryResolve.dictExpand]] exactly: the sequential oracle uses that
-    * rule, and rank-identity depends on both sides expanding alike.
+  /** Evaluates one dictionary-expansion rule as one scan of the sorted term
+    * column: the field keyspace and the rule's key range reach parquet as
+    * pushed filters (row-group min/max prunes every bucket file; a key
+    * hashes across buckets, so bucket pruning does not apply), `accepts`
+    * runs as a typed filter before the distinct, and the sorted, capped
+    * result mirrors [[QueryResolve.dictMatch]], the in-memory twin the
+    * sequential oracle uses. Rank identity depends on both expanding alike.
     *
     * Documented divergence window (ADVICE r3): the scan walks the RAW
     * dictionary, which retains terms whose only postings are tombstoned /
     * superseded docs. A fully-dead term expands but matches nothing — no
-    * rank effect — EXCEPT when the prefix matches more than
-    * [[QueryResolve.MaxPrefixExpansion]] terms: a dead term inside the
+    * rank effect — EXCEPT when a rule matches more than its cap
+    * ([[QueryResolve.MaxPrefixExpansion]]): a dead term inside the
     * lexicographically-first cap then displaces a live term beyond it,
     * while an oracle over the live corpus would not (Lucene diverges the
     * same way: deleted docs stay in the terms dict until merge). Compaction
     * drops dead terms and restores exact agreement — covered by the
     * EngineSpec "over-cap prefix + deletes" fixture.
     */
-  private def prefixScan(v: IndexView, prefix: String): Dataset[String] = {
-    var scan = v.postings
-      .filter($"term" >= prefix && $"term" < prefix + "\uffff")
-    if (!prefix.contains(":")) // text-field prefix: skip field-qualified keys
-      scan = scan.filter(!$"term".contains(":"))
-    scan.select($"term").distinct().orderBy($"term")
-      .limit(QueryResolve.MaxPrefixExpansion).as[String]
+  private def dictScan(v: IndexView, m: QueryResolve.DictMatch)
+      : Dataset[String] = {
+    var scan =
+      if (m.fieldPfx.isEmpty) v.postings.filter(!$"term".contains(":"))
+      else v.postings.filter($"term".startsWith(m.fieldPfx))
+    m.lo.foreach { case (b, inc) =>
+      scan = scan.filter(if (inc) $"term" >= b else $"term" > b) }
+    m.hi.foreach { case (b, inc) =>
+      scan = scan.filter(if (inc) $"term" <= b else $"term" < b) }
+    val accepts = m.accepts // closures must not capture the engine
+    val pfxLen = m.fieldPfx.length
+    scan.select($"term").as[String]
+      .filter(t => accepts(t.substring(pfxLen)))
+      .distinct().orderBy($"term").limit(m.cap)
   }
 
-  /** Field-restricted dictionary scan: the postings relation constrained
-    * to ONE indexed field's keyspace — bare (text) keys exclude every
-    * ':'-qualified key, title keys by prefix. The single definition behind
-    * the fuzzy/wildcard/range/regex surfaces: a field-keying change lands
-    * here once.
+  /** Plan-audit hook (ExplainCheck): the physical plan of a rule's scan,
+    * whose keyspace and key range must reach parquet as PushedFilters.
     */
-  private def fieldTermScan(v: IndexView, fieldPfx: String): DataFrame =
-    if (fieldPfx.isEmpty) v.postings.filter(!$"term".contains(":"))
-    else v.postings.filter($"term".startsWith(fieldPfx))
+  def dictScanPlan(m: QueryResolve.DictMatch): String =
+    dictScan(view, m).queryExecution.executedPlan.toString
 
-  /** Lucene `term~N` dictionary expansion: distinct same-field terms within
-    * Damerau-Levenshtein maxEdits of the key's token, sorted, capped —
-    * [[QueryResolve.dictFuzzy]] is the in-memory twin; both sides must stay
-    * in lockstep or rank-identity breaks.
-    *
-    * Plan shape: Lucene intersects a Levenshtein automaton with its term
-    * FST; the Spark analog is one column-pruned distinct scan of the term
-    * dictionary with the distance predicate evaluated distributedly. A
-    * field-qualified key pushes its `title:` range to parquet; a bare key
-    * scans the full dictionary (edits can change the first character, so no
-    * range prunes) — bounded by vocabulary size, not corpus size, and the
-    * length window cuts the distinct shuffle before the matrix runs.
-    */
-  private def fuzzyScan(v: IndexView, key: String, maxEdits: Int)
-      : (Dataset[String], String) = {
-    val colon = key.indexOf(':')
-    val (fieldPfx, base) =
-      if (colon >= 0) (key.substring(0, colon + 1), key.substring(colon + 1))
-      else ("", key)
-    var scan = fieldTermScan(v, fieldPfx)
-    scan = scan.filter(length($"term")
-      .between(fieldPfx.length + base.length - maxEdits,
-        fieldPfx.length + base.length + maxEdits))
-    val pfxLen = fieldPfx.length
-    (scan.select($"term").distinct().as[String]
-      .filter(t => Fuzzy.within(t.substring(pfxLen), base, maxEdits))
-      .orderBy($"term").limit(QueryResolve.MaxPrefixExpansion),
-      key + "~" + maxEdits)
-  }
-
-  /** Lucene wildcard (`te?t`, `t*st`, `*ing`) dictionary expansion —
-    * [[QueryResolve.dictWildcard]] is the in-memory twin. The pattern's
-    * literal prefix becomes a term-range pushdown exactly like a trailing-*
-    * prefix query; a leading-wildcard pattern scans the full (vocabulary-
-    * bounded) dictionary, the same cost Solr documents for its leading
-    * wildcards. Cache key is the pattern key itself: it contains '*'/'?',
-    * which no term key and no other cache family can.
-    */
-  private def wildcardScan(v: IndexView, key: String)
-      : (Dataset[String], String) = {
-    val colon = key.indexOf(':')
-    val (fieldPfx, pat) =
-      if (colon >= 0) (key.substring(0, colon + 1), key.substring(colon + 1))
-      else ("", key)
-    var scan = fieldTermScan(v, fieldPfx)
-    val lit = fieldPfx + Glob.literalPrefix(pat)
-    if (lit.length > fieldPfx.length)
-      scan = scan.filter($"term" >= lit && $"term" < lit + "\uffff")
-    val pfxLen = fieldPfx.length
-    (scan.select($"term").distinct().as[String]
-      .filter(t => Glob.matches(t.substring(pfxLen), pat))
-      .orderBy($"term").limit(QueryResolve.MaxPrefixExpansion), key)
-  }
-
-  /** Lucene term-range (`text:[aa TO ab]`) dictionary expansion —
-    * [[QueryResolve.dictRange]] is the in-memory twin. The purest pushdown
-    * of the four families: both bounds AND the field prefix are plain
-    * range/StartsWith predicates on the sorted term column, so the whole
-    * expansion is one pruned parquet range scan with no driver-side
-    * matching at all (Lucene's analog walks the term FST between the
-    * bounds).
-    */
-  private def rangeScan(v: IndexView, fieldPfx: String, lo: Option[String],
-      hi: Option[String], incLo: Boolean, incHi: Boolean)
-      : (Dataset[String], String) = {
-    var scan = fieldTermScan(v, fieldPfx)
-    lo.foreach { b =>
-      val q = fieldPfx + b
-      scan = scan.filter(if (incLo) $"term" >= q else $"term" > q)
-    }
-    hi.foreach { b =>
-      val q = fieldPfx + b
-      scan = scan.filter(if (incHi) $"term" <= q else $"term" < q)
-    }
-    // cache key = the literal's canonical rendering (brackets + " TO "
-    // cannot appear in any other cache family's keys)
-    val cacheKey = fieldPfx + (if (incLo) "[" else "{") + lo.getOrElse("*") +
-      " TO " + hi.getOrElse("*") + (if (incHi) "]" else "}")
-    (scan.select($"term").distinct().orderBy($"term")
-      .limit(QueryResolve.MaxPrefixExpansion).as[String], cacheKey)
-  }
-
-  /** Plan-audit hooks (ExplainCheck): physical plans of the dictionary
-    * scans. The prefix and term-range scans must show their bounds reaching
-    * the parquet reader as PushedFilters (no full-vocabulary decode); a
-    * field-qualified fuzzy key must show its `title:` StartsWith pushed; a
-    * wildcard with a literal prefix must show the term-range pushdown.
-    */
-  def prefixScanPlan(prefix: String): String =
-    prefixScan(view, prefix).queryExecution.executedPlan.toString
-  def fuzzyScanPlan(key: String, maxEdits: Int): String =
-    fuzzyScan(view, key, maxEdits)._1.queryExecution.executedPlan.toString
-  def wildcardScanPlan(key: String): String =
-    wildcardScan(view, key)._1.queryExecution.executedPlan.toString
-  def termRangeScanPlan(fieldPfx: String, lo: Option[String],
-      hi: Option[String], incLo: Boolean, incHi: Boolean): String =
-    rangeScan(view, fieldPfx, lo, hi, incLo, incHi)
-      ._1.queryExecution.executedPlan.toString
-
-  // the prefix scan is planned only on a miss; the others pay their plan
-  // first because it also renders their cache key
-  private def expandPrefix(v: IndexView, prefix: String): Seq[String] =
-    cached(v.prefixCache, prefix)(prefixScan(v, prefix).collect().toSeq)
-
-  private def expandScan(v: IndexView,
-      scanAndKey: (Dataset[String], String)): Seq[String] =
-    cached(v.prefixCache, scanAndKey._2)(scanAndKey._1.collect().toSeq)
+  private def expand(v: IndexView, key: String,
+      m: QueryResolve.DictMatch): Seq[String] =
+    cached(v.prefixCache, key)(dictScan(v, m).collect().toSeq)
 
   /** The four dictionary-expansion rules over one index snapshot. */
   private def expander(v: IndexView): QueryResolve.Expander =
-    new QueryResolve.Expander {
-      def prefix(key: String): Seq[String] = expandPrefix(v, key)
-      def fuzzy(key: String, maxEdits: Int): Seq[String] =
-        expandScan(v, fuzzyScan(v, key, maxEdits))
-      def wildcard(key: String): Seq[String] =
-        expandScan(v, wildcardScan(v, key))
-      def range(fieldPfx: String, lo: Option[String], hi: Option[String],
-          incLo: Boolean, incHi: Boolean): Seq[String] =
-        expandScan(v, rangeScan(v, fieldPfx, lo, hi, incLo, incHi))
-    }
+    QueryResolve.expanderOf(expand(v, _, _))
 
   // ------------------------------------------------------- filter predicates
 
@@ -917,9 +805,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val avgdls = avgdlOf(v.stats)
 
     // per-term global df for idf: tiny agg over the pruned scan
-    val dfByTerm: Map[String, Long] = postingsFor(allTerms, v)
-      .groupBy($"term").agg(sum($"count").as("df"))
-      .as[(String, Long)].collect().toMap
+    val dfByTerm = dfOf(v, allTerms)
     val bDf = spark.sparkContext.broadcast(dfByTerm)
 
     val scoringSet = scoring.toSet
@@ -1382,9 +1268,7 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val cand = tfm.collect { case (t, c) if c >= minTf => t }.toSeq.sorted
     if (cand.isEmpty) return Seq.empty
     val keyOf = cand.map(t => t -> QueryParser.termKey(df, t)).toMap
-    val dfs = postingsFor(cand.map(keyOf), v).toDF()
-      .groupBy($"term").agg(sum($"count").as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfs = dfOf(v, cand.map(keyOf))
     cand.flatMap { t =>
       val d = dfs.getOrElse(keyOf(t), 0L)
       if (d >= minDf)
@@ -1439,13 +1323,9 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
       s"suggest input '$term' must analyze to a single token")
     val key = QueryParser.termKey(df, toks(0))
     val pfxLen = key.length - toks(0).length
-    val cands = expandScan(v, fuzzyScan(v, key, 2))
+    val cands = expander(v).fuzzy(key, 2)
     if (cands.isEmpty) return Seq.empty
-    // postingsFor prunes the scan to the candidates' termBucket dirs
-    // (review r5: a raw postings.filter planned all bucket dirs)
-    val dfs = postingsFor(cands, v).toDF()
-      .groupBy($"term").agg(sum($"count").as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfs = dfOf(v, cands)
     cands.map { k =>
       val t = k.substring(pfxLen)
       (t, Fuzzy.distance(t, toks(0)), dfs.getOrElse(k, 0L))
@@ -1529,11 +1409,9 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     val v = snapshot()
     val key = QueryParser.termKey(df, toks(0))
     val pfxLen = key.length - toks(0).length
-    val cands = expandPrefix(v, key).take(n)
+    val cands = expander(v).prefix(key).take(n)
     if (cands.isEmpty) return Seq.empty
-    val dfs = postingsFor(cands, v).toDF()
-      .groupBy($"term").agg(sum($"count").as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfs = dfOf(v, cands)
     cands.map(k => (k.substring(pfxLen), dfs.getOrElse(k, 0L)))
   }
 
@@ -1543,9 +1421,10 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     * terms.regex (and this engine's leading-`*` wildcards), the scan is a
     * full pass over the field's vocabulary-bounded dictionary: an
     * arbitrary regex has no pushdown contract, and Solr documents the same
-    * cost for its regex term enumeration. The regex runs distributed (a
-    * typed filter over the distinct term scan), only the capped matches
-    * come back to the driver; an invalid pattern rejects loudly at compile.
+    * cost for its regex term enumeration. The regex is one
+    * [[QueryResolve.DictMatch]] rule with cap n, run distributed by the
+    * shared dictionary scan; only the capped matches come back to the
+    * driver; an invalid pattern rejects loudly at compile.
     */
   def termsByRegex(pattern: String, n: Int = 20, df: String = "text")
       : Seq[(String, Long)] = {
@@ -1564,17 +1443,11 @@ final class QueryEngine(spark: SparkSession, indexDir: String,
     // a metachar-free regex like "w0001" would otherwise collide with the
     // plain-prefix entry for the same string
     val cacheKey = "re\u0000" + df + "\u0000" + n + "\u0000" + pattern
-    val pfxLen = fieldPfx.length
-    val matched = cached(v.prefixCache, cacheKey)(
-      fieldTermScan(v, fieldPfx)
-        .select($"term").distinct().as[String]
-        .filter(t => rx.matcher(t.substring(pfxLen)).matches())
-        .orderBy($"term").limit(n).collect().toSeq)
+    val matched = expand(v, cacheKey,
+      QueryResolve.DictMatch(fieldPfx, rx.matcher(_).matches(), None, None, n))
     if (matched.isEmpty) return Seq.empty
-    val dfs = postingsFor(matched, v).toDF()
-      .groupBy($"term").agg(sum($"count").as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    matched.map(k => (k.substring(pfxLen), dfs.getOrElse(k, 0L)))
+    val dfs = dfOf(v, matched)
+    matched.map(k => (k.substring(fieldPfx.length), dfs.getOrElse(k, 0L)))
   }
 
   /** Real-time get by url — the Solr `/get?id=` analog the reference calls

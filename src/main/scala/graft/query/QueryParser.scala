@@ -187,13 +187,13 @@ object QueryResolve {
     */
   val MaxPrefixExpansion = 512
 
-  /** Dictionary expansion for multi-term literals. Both methods return
+  /** Dictionary expansion for multi-term literals. Every method returns
     * matching dictionary terms SORTED ascending and capped at
     * [[MaxPrefixExpansion]]; for a bare (text-field) literal the expansion
     * must exclude field-qualified keys (those containing ':'), for a
-    * field-qualified one it must stay within that field. [[dictExpander]]
-    * implements both rules for an in-memory dictionary; the engine's
-    * DataFrame twin must order and cap identically.
+    * field-qualified one it must stay within that field. [[expanderOf]]
+    * states each method once as a [[DictMatch]] rule; [[dictMatch]] and the
+    * engine's scan evaluate it.
     */
   trait Expander {
     /** Trailing-`*` prefix: dictionary terms starting with `key`. */
@@ -215,20 +215,16 @@ object QueryResolve {
   }
 
   def resolve(ast: QueryAst, expander: Expander): ResolvedQuery = {
-    val cache = mutable.HashMap.empty[(String, Int), Seq[String]]
-    def terms(l: TermLit): Seq[String] = l match {
+    val cache = mutable.HashMap.empty[TermLit, Seq[String]]
+    def terms(l: TermLit): Seq[String] = cache.getOrElseUpdate(l, l match {
       case ExactLit(k) => Seq(k)
       case MultiLit(_, ws) => ws.map(_._1)
-      case PrefixLit(p) =>
-        cache.getOrElseUpdate((p, -1), expander.prefix(p))
-      case WildcardLit(p) =>
-        cache.getOrElseUpdate((p, -2), expander.wildcard(p))
-      case FuzzyLit(k, e) =>
-        cache.getOrElseUpdate((k, e), expander.fuzzy(k, e))
+      case PrefixLit(p) => expander.prefix(p)
+      case WildcardLit(p) => expander.wildcard(p)
+      case FuzzyLit(k, e) => expander.fuzzy(k, e)
       case r: TermRangeLit =>
-        cache.getOrElseUpdate((r.key, -3),
-          expander.range(r.fieldPfx, r.lo, r.hi, r.incLo, r.incHi))
-    }
+        expander.range(r.fieldPfx, r.lo, r.hi, r.incLo, r.incHi)
+    })
     val clauses = ast.clauses.flatMap { c =>
       val groups = c.pos.map(terms)
       // a positive prefix matching nothing in the dictionary makes the
@@ -270,76 +266,101 @@ object QueryResolve {
     ResolvedQuery(scoring, clauses, boosts, groups, ast.tie)
   }
 
-  /** The shared expansion rule over an in-memory term dictionary (the
-    * sequential oracle; tests). The engine's DataFrame twin must order and
-    * cap identically.
+  /** One dictionary-expansion rule. A dictionary key matches iff it lies in
+    * the field keyspace `fieldPfx` (`""` = the text field, whose keys carry
+    * no ':'; else keys starting with `fieldPfx`) and `accepts` holds for its
+    * token part; the matches are taken term-sorted, at most `cap` of them.
+    * `lo`/`hi` are `(key, inclusive)` bounds that every match lies within:
+    * a pushdown hint for the scan, never part of the definition.
+    * `accepts` runs on executors, so it must capture only serializable
+    * values.
     */
-  def dictExpand(dict: Iterable[String])(prefix: String): Seq[String] =
-    dict.iterator
-      .filter(k => k.startsWith(prefix) &&
-        (prefix.contains(":") || !k.contains(":")))
-      .toSeq.sorted.take(MaxPrefixExpansion)
+  final case class DictMatch(fieldPfx: String, accepts: String => Boolean,
+      lo: Option[(String, Boolean)], hi: Option[(String, Boolean)], cap: Int)
 
-  /** Fuzzy twin of [[dictExpand]]: same-field dictionary terms within
-    * Damerau-Levenshtein `maxEdits` of `key`'s token part, sorted, capped.
-    */
-  def dictFuzzy(dict: Iterable[String])(key: String, maxEdits: Int)
-      : Seq[String] = {
+  /** (field prefix, token part) of a field-qualified key. */
+  private def splitKey(key: String): (String, String) = {
     val colon = key.indexOf(':')
-    val (fieldPfx, base) =
-      if (colon >= 0) (key.substring(0, colon + 1), key.substring(colon + 1))
-      else ("", key)
-    dict.iterator
-      .filter { k =>
-        (if (fieldPfx.isEmpty) !k.contains(":") else k.startsWith(fieldPfx)) &&
-          Fuzzy.within(k.substring(fieldPfx.length), base, maxEdits)
-      }
-      .toSeq.sorted.take(MaxPrefixExpansion)
+    if (colon >= 0) (key.substring(0, colon + 1), key.substring(colon + 1))
+    else ("", key)
   }
 
-  /** Wildcard twin of [[dictExpand]]: same-field dictionary terms whose
-    * token part glob-matches `key`'s pattern part, sorted, capped.
-    */
-  def dictWildcard(dict: Iterable[String])(key: String): Seq[String] = {
-    val colon = key.indexOf(':')
-    val (fieldPfx, pat) =
-      if (colon >= 0) (key.substring(0, colon + 1), key.substring(colon + 1))
-      else ("", key)
-    dict.iterator
-      .filter { k =>
-        (if (fieldPfx.isEmpty) !k.contains(":") else k.startsWith(fieldPfx)) &&
-          Glob.matches(k.substring(fieldPfx.length), pat)
-      }
-      .toSeq.sorted.take(MaxPrefixExpansion)
+  /** Trailing-`*` prefix: same-field keys starting with `key`. */
+  def prefixMatch(key: String): DictMatch = {
+    val (fieldPfx, tok) = splitKey(key)
+    DictMatch(fieldPfx, _.startsWith(tok), Some((key, true)),
+      Some((key + "\uffff", false)), MaxPrefixExpansion)
   }
 
-  /** Term-range twin of [[dictExpand]]: same-field dictionary terms whose
-    * token part falls within the lexicographic bounds, sorted, capped.
+  /** Lucene `term~N`: same-field tokens within Damerau-Levenshtein
+    * `maxEdits` of the key's token. Edits can change the first character,
+    * so no key range bounds the matches.
     */
-  def dictRange(dict: Iterable[String])(fieldPfx: String, lo: Option[String],
-      hi: Option[String], incLo: Boolean, incHi: Boolean): Seq[String] =
+  def fuzzyMatch(key: String, maxEdits: Int): DictMatch = {
+    val (fieldPfx, base) = splitKey(key)
+    DictMatch(fieldPfx, Fuzzy.within(_, base, maxEdits), None, None,
+      MaxPrefixExpansion)
+  }
+
+  /** Lucene wildcard: same-field tokens glob-matching the key's pattern.
+    * The pattern's literal prefix bounds the matches like a prefix query; a
+    * leading-wildcard pattern has none and scans the whole field, the cost
+    * Solr documents for its leading wildcards.
+    */
+  def wildcardMatch(key: String): DictMatch = {
+    val (fieldPfx, pat) = splitKey(key)
+    val lit = fieldPfx + Glob.literalPrefix(pat)
+    val bounded = lit.length > fieldPfx.length
+    DictMatch(fieldPfx, Glob.matches(_, pat),
+      Option.when(bounded)((lit, true)),
+      Option.when(bounded)((lit + "\uffff", false)), MaxPrefixExpansion)
+  }
+
+  /** Lucene term range: same-field tokens within the lexicographic bounds;
+    * the bounds themselves are the key range.
+    */
+  def rangeMatch(r: TermRangeLit): DictMatch = {
+    val TermRangeLit(fieldPfx, lo, hi, incLo, incHi) = r
+    DictMatch(fieldPfx,
+      t => lo.forall(v => if (incLo) t >= v else t > v) &&
+        hi.forall(v => if (incHi) t <= v else t < v),
+      lo.map(v => (fieldPfx + v, incLo)), hi.map(v => (fieldPfx + v, incHi)),
+      MaxPrefixExpansion)
+  }
+
+  /** Evaluates a rule over an in-memory dictionary (the sequential oracle;
+    * tests) from its definition alone: the range hint is not used, so the
+    * engine's pushed-down scan is checked against it.
+    */
+  def dictMatch(dict: Iterable[String], m: DictMatch): Seq[String] =
     dict.iterator
       .filter { k =>
-        (if (fieldPfx.isEmpty) !k.contains(":") else k.startsWith(fieldPfx)) && {
-          val t = k.substring(fieldPfx.length)
-          lo.forall(v => if (incLo) t >= v else t > v) &&
-            hi.forall(v => if (incHi) t <= v else t < v)
-        }
+        (if (m.fieldPfx.isEmpty) !k.contains(":")
+         else k.startsWith(m.fieldPfx)) &&
+          m.accepts(k.substring(m.fieldPfx.length))
       }
-      .toSeq.sorted.take(MaxPrefixExpansion)
+      .toSeq.sorted.take(m.cap)
 
-  /** All four expansion rules over one in-memory dictionary (the sequential
-    * oracle; tests).
+  /** The four expansion families as rules, each with its cache key (the
+    * literal's own key; fuzzy adds `~N`). `run` evaluates a rule; keys
+    * render without evaluating anything, so a cache hit plans nothing.
     */
-  def dictExpander(dict: Iterable[String]): Expander = new Expander {
-    def prefix(key: String): Seq[String] = dictExpand(dict)(key)
-    def fuzzy(key: String, maxEdits: Int): Seq[String] =
-      dictFuzzy(dict)(key, maxEdits)
-    def wildcard(key: String): Seq[String] = dictWildcard(dict)(key)
-    def range(fieldPfx: String, lo: Option[String], hi: Option[String],
-        incLo: Boolean, incHi: Boolean): Seq[String] =
-      dictRange(dict)(fieldPfx, lo, hi, incLo, incHi)
-  }
+  def expanderOf(run: (String, DictMatch) => Seq[String]): Expander =
+    new Expander {
+      def prefix(key: String): Seq[String] = run(key, prefixMatch(key))
+      def fuzzy(key: String, maxEdits: Int): Seq[String] =
+        run(key + "~" + maxEdits, fuzzyMatch(key, maxEdits))
+      def wildcard(key: String): Seq[String] = run(key, wildcardMatch(key))
+      def range(fieldPfx: String, lo: Option[String], hi: Option[String],
+          incLo: Boolean, incHi: Boolean): Seq[String] = {
+        val r = TermRangeLit(fieldPfx, lo, hi, incLo, incHi)
+        run(r.key, rangeMatch(r))
+      }
+    }
+
+  /** All four expansion rules over one in-memory dictionary. */
+  def dictExpander(dict: Iterable[String]): Expander =
+    expanderOf((_, m) => dictMatch(dict, m))
 }
 
 /** Query-string surgery shared by the spellcheck-collation twins

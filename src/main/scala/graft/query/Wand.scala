@@ -239,6 +239,46 @@ object Wand {
     true
   }
 
+  /** The edismax tie rule ([[ResolvedQuery]] groups) over one doc's
+    * term-sorted contributions, NaN = absent, with `gids` the per-term group
+    * ids (0 = ungrouped): in each group the first member at the group max
+    * keeps factor 1 and every other member is damped ×tie. `apply` replaces
+    * each contribution in place by its factored value and returns their
+    * term-sorted sum. The scratch is reused across calls (no per-candidate
+    * allocation), so one instance serves one thread.
+    */
+  final class TieFold(gids: Array[Int], tie: Double) {
+    private val groupMax = new Array[Double](gids.foldLeft(0)(math.max) + 1)
+    private val taken = new Array[Boolean](groupMax.length)
+
+    def apply(contrib: Array[Double]): Double = {
+      java.util.Arrays.fill(groupMax, Double.NegativeInfinity)
+      java.util.Arrays.fill(taken, false)
+      var i = 0
+      while (i < contrib.length) {
+        val g = gids(i)
+        if (g > 0 && contrib(i) > groupMax(g)) groupMax(g) = contrib(i)
+        i += 1
+      }
+      var s = 0.0
+      i = 0
+      while (i < contrib.length) {
+        val c = contrib(i)
+        if (!java.lang.Double.isNaN(c)) {
+          val g = gids(i)
+          val f =
+            if (g == 0) c
+            else if (!taken(g) && c == groupMax(g)) { taken(g) = true; c }
+            else tie * c
+          contrib(i) = f
+          s += f
+        }
+        i += 1
+      }
+      s
+    }
+  }
+
   /** @param segsByTerm   posting segments grouped by term (only segments
     *                     overlapping [lo, hi) need be present)
     * @param dfByTerm     GLOBAL document frequency per term (sum of `count`
@@ -344,20 +384,18 @@ object Wand {
     // factor-1 sums: factors are ≤ 1, so pruning remains admissible (and
     // exact for tie=1 / groupless queries, the common case).
     val gids: Array[Int] = cursors.map(c => groups.getOrElse(c.term, 0))
-    val nGroups = if (gids.isEmpty) 0 else gids.max
-    val useTie = tie != 1.0 && nGroups > 0
-    val tieContrib = if (useTie) new Array[Double](cursors.length) else null
-    val tieGroupMax = if (useTie) new Array[Double](nGroups + 1) else null
-    val tieTaken = if (useTie) new Array[Boolean](nGroups + 1) else null
+    val tieFold =
+      if (tie != 1.0 && gids.exists(_ > 0)) new TieFold(gids, tie) else null
+    val tieContrib = if (tieFold != null) new Array[Double](cursors.length)
+      else null
 
     /** Per-doc score over the term-sorted cursor array. Groupless (or
       * tie=1): plain sum of contributions in term-sorted order. With tie
-      * groups: the ResolvedQuery.groups rule — first group member at the
-      * group max keeps factor 1, other members damp ×tie, accumulation
-      * stays term-sorted — identical to the exhaustive fold and the oracle.
+      * groups: [[TieFold]] over the term-sorted contributions — identical
+      * to the exhaustive fold and the oracle.
       */
     def scoreAt(docId: Long): Double = {
-      if (!useTie) {
+      if (tieFold == null) {
         var s = 0.0
         var i = 0
         while (i < cursors.length) {
@@ -370,8 +408,6 @@ object Wand {
         }
         s
       } else {
-        java.util.Arrays.fill(tieGroupMax, Double.NegativeInfinity)
-        java.util.Arrays.fill(tieTaken, false)
         var i = 0
         while (i < cursors.length) {
           val c = cursors(i)
@@ -381,25 +417,9 @@ object Wand {
             if (!c.exhausted && c.curDoc == docId) contrib = c.curScore
           }
           tieContrib(i) = contrib
-          val g = gids(i)
-          if (g > 0 && !java.lang.Double.isNaN(contrib) &&
-              contrib > tieGroupMax(g)) tieGroupMax(g) = contrib
           i += 1
         }
-        var s = 0.0
-        i = 0
-        while (i < cursors.length) {
-          val contrib = tieContrib(i)
-          if (!java.lang.Double.isNaN(contrib)) {
-            val g = gids(i)
-            if (g == 0) s += contrib
-            else if (!tieTaken(g) && contrib == tieGroupMax(g)) {
-              s += contrib; tieTaken(g) = true
-            } else s += tie * contrib
-          }
-          i += 1
-        }
-        s
+        tieFold(tieContrib)
       }
     }
 

@@ -978,11 +978,11 @@ class EngineSpec extends AnyFunSuite {
       QueryParser.parse("w1 warc_ts:[2024-01-01T00:00:00Z TO *]^2"))
     // the dict twin honors field scoping, bounds, exclusivity, and the cap
     val dict = Seq("aa", "ab", "ac", "title:aa", "title:ab")
-    assert(QueryResolve.dictRange(dict)("", Some("aa"), Some("ab"),
+    assert(QueryResolve.dictExpander(dict).range("", Some("aa"), Some("ab"),
       true, true) == Seq("aa", "ab"))
-    assert(QueryResolve.dictRange(dict)("", Some("aa"), Some("ac"),
+    assert(QueryResolve.dictExpander(dict).range("", Some("aa"), Some("ac"),
       false, false) == Seq("ab"))
-    assert(QueryResolve.dictRange(dict)("title:", Some("aa"), None,
+    assert(QueryResolve.dictExpander(dict).range("title:", Some("aa"), None,
       false, true) == Seq("title:ab"))
   }
 

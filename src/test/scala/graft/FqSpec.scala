@@ -280,7 +280,10 @@ class FqSpec extends AnyFunSuite {
       ("w00017 w00342", Seq("the")), // + term-fq ids
       ("*:*", Seq("lang:no")),       // match-all: pure-filter fq ids
       ("*:*", Seq("w00017 OR w00342")), // match-all: term-fq ids
-      ("w0099*", Nil))               // prefix expansion
+      ("w0099*", Nil),               // prefix expansion
+      ("w00017~1", Nil),             // fuzzy expansion
+      ("w0001?", Nil),               // wildcard expansion
+      ("text:[w00015 TO w00020]", Nil)) // term-range expansion
     val eng = new QueryEngine(spark, indexDir, conf.numBuckets)
     shapes.foreach { case (q, fq) =>
       val warm = rows(eng.search(q, 10, fq = fq))

@@ -58,15 +58,16 @@ class FuzzySpec extends AnyFunSuite {
   test("dictFuzzy: field scoping, sort, cap, self-inclusion") {
     val dict = Seq("w1", "w2", "x1", "title:w1", "title:w3", "title:abcdef")
     // bare key: only un-fielded terms, distance ≤ 1 of "w1"
-    assert(QueryResolve.dictFuzzy(dict)("w1", 1) == Seq("w1", "w2", "x1"))
+    assert(QueryResolve.dictExpander(dict).fuzzy("w1", 1) ==
+      Seq("w1", "w2", "x1"))
     // title key: compares the TOKEN part, keeps the field prefix in results
-    assert(QueryResolve.dictFuzzy(dict)("title:w1", 1) ==
+    assert(QueryResolve.dictExpander(dict).fuzzy("title:w1", 1) ==
       Seq("title:w1", "title:w3"))
-    assert(QueryResolve.dictFuzzy(dict)("w1", 0) == Seq("w1"))
+    assert(QueryResolve.dictExpander(dict).fuzzy("w1", 0) == Seq("w1"))
     // cap: lexicographically first MaxPrefixExpansion — 676 terms differing
     // from the target only in the last two chars are ALL within distance 2
     val big = for (a <- 'a' to 'z'; b <- 'a' to 'z') yield s"term$a$b"
-    val got = QueryResolve.dictFuzzy(big)("termaa", 2)
+    val got = QueryResolve.dictExpander(big).fuzzy("termaa", 2)
     assert(got.size == QueryResolve.MaxPrefixExpansion)
     assert(got == got.sorted && got.head == "termaa")
   }

@@ -58,16 +58,17 @@ class WildcardSpec extends AnyFunSuite {
 
   test("dictWildcard: field scoping, sort, cap") {
     val dict = Seq("test", "text", "tent", "toast", "title:test", "title:ten")
-    assert(QueryResolve.dictWildcard(dict)("te?t") ==
+    assert(QueryResolve.dictExpander(dict).wildcard("te?t") ==
       Seq("tent", "test", "text"))
-    assert(QueryResolve.dictWildcard(dict)("t*st") == Seq("test", "toast"))
-    assert(QueryResolve.dictWildcard(dict)("*t") ==
+    assert(QueryResolve.dictExpander(dict).wildcard("t*st") ==
+      Seq("test", "toast"))
+    assert(QueryResolve.dictExpander(dict).wildcard("*t") ==
       Seq("tent", "test", "text", "toast"))
-    assert(QueryResolve.dictWildcard(dict)("title:te*") ==
+    assert(QueryResolve.dictExpander(dict).wildcard("title:te*") ==
       Seq("title:ten", "title:test"))
     // cap: lexicographically first MaxPrefixExpansion
     val big = for (a <- 'a' to 'z'; b <- 'a' to 'z') yield s"term$a$b"
-    val got = QueryResolve.dictWildcard(big)("term*")
+    val got = QueryResolve.dictExpander(big).wildcard("term*")
     assert(got.size == QueryResolve.MaxPrefixExpansion)
     assert(got == got.sorted && got.head == "termaa")
   }
